@@ -4,13 +4,15 @@ A from-scratch reimplementation of the query/data-processing capabilities of
 ``1998x-stack/logparser_llm`` (Drain-style log-template clustering with an
 LLM fallback), re-expressed Spark-first:
 
-- vectorized pandas/Arrow UDFs for the regex "extractor" (byte-identical to
-  the reference ``LogCleaner.clean``, /root/reference cleaner.py:39-77),
-- a partition-local prefix-tree (Drain) clustering operator inside
-  ``mapInPandas`` with a broadcast-merged global template pool (the
-  deterministic replacement for per-row LLM calls),
+- a JVM ``regexp_replace`` chain for the regex "extractor" (cross-checked
+  against the reference ``LogCleaner.clean``, cleaner.py:39-77),
+- a deterministic per-line template extractor + one ``groupBy(pattern)``
+  discovery aggregate, merged on the driver into a global template pool;
+  the prefix tree (Drain) runs once per pattern on the driver to build a
+  broadcast pattern → template map (the deterministic replacement for
+  per-row LLM calls),
 - broadcast hash-join enrichment, hash fan-out routing to per-sink tables,
-  salted per-sink aggregate counts,
+  per-sink aggregate counts,
 - checkpoint/lineage manifest for resumable runs,
 - large-scale training-data ops: dedup (exact / minhash-LSH / simhash /
   n-gram Jaccard / embedding-cosine), ANN similarity search, text quality
@@ -22,13 +24,6 @@ broadcast selection and AQE; Python appears only in Arrow-batched UDFs.
 """
 
 __version__ = "0.1.0"
-
-DEFAULT_MAX_DEPTH = 5
-DEFAULT_MIN_CLUSTER_SIZE = 3
-DEFAULT_FUZZY_THRESHOLD = 0.8
-DEFAULT_MERGE_THRESHOLD = 0.9
-DEFAULT_MAX_EDIT_DISTANCE = 3
-DEFAULT_NUM_SINKS = 8
 
 
 def __getattr__(name):

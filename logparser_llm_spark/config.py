@@ -63,24 +63,12 @@ class MergingConfig:
 @dataclass(frozen=True)
 class ScaleConfig:
     """Spark-side knobs (no reference equivalent; the reference is
-    single-process — parser.py:168-172 ignores use_parallel)."""
+    single-process — parser.py:168-172 ignores use_parallel). Keys a
+    config file sets beyond these are ignored, like every other unknown
+    key (``_build_section``)."""
 
     num_sinks: int = 8
-    shuffle_partitions: int = 32
-    discovery_partitions: int = 32       # partitions for the clustering pass
-    salt_buckets: int = 16               # salting for skewed per-sink aggregates
     broadcast_pool_max_templates: int = 100_000
-    arrow_max_records_per_batch: int = 10_000
-    # True → clean/extract run as Python-re Arrow UDFs (byte-parity mode
-    # for corpora with Java/Python regex divergence); False → JVM codegen
-    arrow_parity_mode: bool = False
-    # collect a min-line exemplar per template during discovery
-    # (example_logs parity); disable to cut agg-buffer string traffic
-    collect_examples: bool = True
-    # emit the per-row ParsedLog variables map (reference parser.py:285-297)
-    # — the one Arrow/Python stage in the pipeline; disable at 10^12 rows
-    # if the variable map isn't consumed downstream
-    include_variables: bool = True
 
 
 @dataclass(frozen=True)

@@ -8,13 +8,14 @@ rule requires byte-identical extracted text per url.
 
 Two implementations are provided:
 
-- :func:`clean_udf` — an Arrow-batched pandas UDF using Python ``re``.
-  This is the byte-parity path (Python ``re`` and Java regex disagree on
-  corner cases like unicode ``\\w``), used wherever parity is asserted.
+- :func:`clean_text` / :func:`clean_pandas` — Python ``re``, scalar and
+  over a pandas Series. The reference semantics (Python ``re`` and Java
+  regex disagree on corner cases like unicode ``\\w``), used by the
+  single-process oracle and as the differential tests' reference.
 - :func:`clean_col` — a chain of JVM-side ``F.regexp_replace`` staying
-  inside whole-stage codegen. Preferred in the hot path at scale; the
-  test suite cross-checks it against :func:`clean_udf` on fixtures and
-  the synthetic corpus so we know where the two coincide.
+  inside whole-stage codegen: the pipeline's clean. The test suite
+  cross-checks it against :func:`clean_pandas` on fixtures and the
+  synthetic corpus so we know where the two coincide.
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..config import PreprocessingConfig
 
@@ -60,8 +60,8 @@ _SYMBOLS_RE = re.compile(ALL_SYMBOLS_PATTERN)
 def clean_text(text: str, cfg: PreprocessingConfig = PreprocessingConfig()) -> str:
     """Scalar clean — semantics of reference cleaner.py:39-77.
 
-    Used by the single-process oracle and inside the pandas UDF batches;
-    never called row-at-a-time from Spark.
+    Used by the single-process oracle; never called row-at-a-time from
+    Spark.
     """
     if text is None or not text.strip():
         return ""
@@ -84,7 +84,7 @@ def clean_text(text: str, cfg: PreprocessingConfig = PreprocessingConfig()) -> s
 
 
 def clean_pandas(s: pd.Series, cfg: PreprocessingConfig = PreprocessingConfig()) -> pd.Series:
-    """Vectorized clean over a pandas Series (Arrow batch body).
+    """Vectorized clean over a pandas Series.
 
     ``Series.str.replace`` applies each regex over the whole batch at C
     speed; order matches :func:`clean_text`.
@@ -105,19 +105,6 @@ def clean_pandas(s: pd.Series, cfg: PreprocessingConfig = PreprocessingConfig())
     if cfg.lowercase:
         out = out.str.lower()
     return out.str.replace(WHITESPACE_PATTERN, " ", regex=True).str.strip()
-
-
-def make_clean_udf(cfg: PreprocessingConfig = PreprocessingConfig()):
-    """Arrow-batched pandas UDF wrapping :func:`clean_pandas`.
-
-    Built lazily (UDF registration needs an active SparkSession).
-    """
-
-    @pandas_udf("string")
-    def _clean(s: pd.Series) -> pd.Series:
-        return clean_pandas(s, cfg)
-
-    return _clean
 
 
 def clean_col(col: Column, cfg: PreprocessingConfig = PreprocessingConfig()) -> Column:

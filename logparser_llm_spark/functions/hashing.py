@@ -14,11 +14,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def log_hash_col(col: Column) -> Column:
-    """md5 of the cleaned log = the exact-match cache key (F11)."""
-    return F.md5(col)
-
-
 def log_hash(text: str) -> str:
     return hashlib.md5(text.encode()).hexdigest()
 
@@ -31,11 +26,6 @@ def pattern_bucket_col(pattern: Column, delimiter: str = " ") -> Column:
     """
     tokens3 = F.slice(F.split(pattern, delimiter), 1, 3)
     return F.substring(F.md5(F.array_join(tokens3, "_")), 1, 8)
-
-
-def pattern_bucket(pattern: str) -> str:
-    key = "_".join(pattern.split()[:3])
-    return hashlib.md5(key.encode()).hexdigest()[:8]
 
 
 def md5_bucket_col(key: Column, buckets: int) -> Column:

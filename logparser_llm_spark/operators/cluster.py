@@ -5,8 +5,9 @@ The Spark realization of the reference's stateful clustering engine
 distributed shape here is the classic two-pass Drain-at-scale design:
 
 Pass 1 (discovery, one shuffle):
-    clean (Arrow-batched UDF) → validity filter → deterministic template
-    extraction per row (the LLM replacement) → ``groupBy(pattern).count()``.
+    clean (JVM ``regexp_replace`` chain) → validity filter →
+    deterministic template extraction per row (the LLM replacement) →
+    ``groupBy(pattern)`` (:func:`pattern_counts`).
 
     Discovery is PURELY FUNCTIONAL per row — ``extract_template`` depends
     only on the row's own cleaned text — so the discovered pool is
@@ -33,94 +34,73 @@ Driver merge (pools are O(10²..10³) rows — collect is safe):
     (parser.py:229-232).
 
 Pass 2 (assignment, no shuffle of the fact side):
-    clean (JVM) → extract pattern (JVM) → **broadcast hash join** against
-    a driver-precomputed pattern→template_id map. Tree-walk semantics
-    (first template node on the ≤max_depth walk, prefix_tree.py:154-186,
-    which collapses patterns sharing a ≤max_depth prefix) are preserved
-    by running the tree matcher ONCE PER PATTERN on the driver while
-    building the map — so the per-row path is pure whole-stage codegen
-    with zero Python workers. Rows whose pattern is outside the map (the
-    capped tail / genuinely new patterns in incremental runs) route to
-    'unknown' (parser.py:388-398) or, with ``fallback="tree"``, through a
-    vectorized-masked Arrow UDF that runs the fuzzy tree walk on just
-    those rows. This is the "cached template-match fast path" that
-    replaces the reference's per-row LLM call.
+    **broadcast hash join** of each pattern against a driver-precomputed
+    pattern→template_id map. Tree-walk semantics (first template node on
+    the ≤max_depth walk, prefix_tree.py:154-186, which collapses patterns
+    sharing a ≤max_depth prefix) are preserved by running the tree
+    matcher ONCE PER PATTERN on the driver while building the map — so
+    the per-row path is pure whole-stage codegen with zero Python
+    workers. Patterns outside the map (the capped tail / genuinely new
+    patterns in incremental runs) route to 'unknown' (parser.py:388-398).
+    This is the "cached template-match fast path" that replaces the
+    reference's per-row LLM call. Per-row output (:func:`assign_templates`)
+    joins every row; a counts-only caller joins the discovery aggregate
+    itself (:func:`assign_patterns` over :func:`pattern_counts`), so the
+    work is once per pattern, not once per line.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
-from ..functions.cleaning import clean_pandas, is_valid_log_col
+from ..functions.cleaning import clean_col, is_valid_log_col
 from .drain import UNKNOWN_ID, TemplateTree, extract_template, extract_template_col
 from .merging import dedup_pool_exact, generalize_pool, merge_pool
 
 
-
 def cleaned_frame(df: DataFrame, text_col: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Append a ``cleaned`` column (the extractor) and a validity flag.
-
-    Default path is the JVM ``regexp_replace`` chain (whole-stage
-    codegen, no Python workers); ``cfg.scale.arrow_parity_mode`` switches
-    to the Arrow-batched Python-``re`` UDF for corpora where Java/Python
-    regex semantics could diverge (the two are cross-checked byte-for-
-    byte on fixtures + the synthetic corpus in tests)."""
-    pre = cfg.preprocessing
-    if cfg.scale.arrow_parity_mode:
-
-        @pandas_udf("string")
-        def _clean(s: pd.Series) -> pd.Series:
-            return clean_pandas(s, pre)
-
-        cleaned = _clean(F.col(text_col))
-    else:
-        from ..functions.cleaning import clean_col
-
-        cleaned = clean_col(F.col(text_col), pre)
-    return df.withColumn("cleaned", cleaned).withColumn(
+    """Append a ``cleaned`` column (the extractor's JVM ``regexp_replace``
+    chain — whole-stage codegen, no Python workers) and a validity flag.
+    Tests cross-check it byte-for-byte against the Python reference
+    ``clean_pandas``."""
+    return df.withColumn("cleaned", clean_col(F.col(text_col), cfg.preprocessing)).withColumn(
         "is_valid", is_valid_log_col(F.col("cleaned"))
     )
 
 
-def extract_pattern_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
-    """Arrow-batched UDF: cleaned text → deterministic template pattern
-    (the parity-mode path; the default hot path is the JVM
-    :func:`~.drain.extract_template_col`)."""
-    delim = cfg.tree.token_delimiter
-
-    @pandas_udf("string")
-    def _extract(cleaned: pd.Series) -> pd.Series:
-        memo: dict[str, str] = {}
-        return cleaned.map(lambda c: memo.setdefault(c, extract_template(c, delim)))
-
-    return _extract
-
-
-def pattern_col(cfg: PipelineConfig = DEFAULT_CONFIG):
-    """cleaned → pattern, JVM by default, Python in parity mode."""
-    if cfg.scale.arrow_parity_mode:
-        udf = extract_pattern_udf(cfg)
-        return lambda c: udf(c)
+def pattern_col():
+    """cleaned → pattern: the JVM extractor (token-for-token equal to the
+    Python :func:`~.drain.extract_template`, asserted in tests)."""
     return extract_template_col
+
+
+def pattern_counts(cleaned_df: DataFrame) -> DataFrame:
+    """The discovery aggregate of a cleaned frame: one row per pattern
+    ``(pattern, count, example)``, where ``example`` is the min cleaned
+    line (example_logs parity, template_pool.py:102-105), plus one
+    null-pattern row carrying the invalid lines. Everything a counts-only
+    caller needs follows from it — discovery reads the non-null rows and
+    :func:`assign_patterns` labels each row once."""
+    pattern = F.when(F.col("is_valid"), extract_template_col(F.col("cleaned")))
+    return cleaned_df.groupBy(pattern.alias("pattern")).agg(
+        F.count(F.lit(1)).alias("count"), F.min("cleaned").alias("example")
+    )
 
 
 def discover_templates(
     df: DataFrame, text_col: str, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> list[dict]:
     """Pass 1: per-row template extraction + groupBy(pattern) agg
-    (count + deterministic min-line exemplar — example_logs parity,
-    template_pool.py:102-105); returns the merged, canonicalized global
-    pool (small, driver-side). Pool bounded by a top-N-by-count cap
-    (the reference's pool-bounding auto-merge analogue, parser.py:229-232;
-    the capped tail routes to 'unknown').
+    (count + deterministic min-line exemplar); returns the merged,
+    canonicalized global pool (small, driver-side). Pool bounded by a
+    top-N-by-count cap (the reference's pool-bounding auto-merge
+    analogue, parser.py:229-232; the capped tail routes to 'unknown').
 
     Deterministic at any parallelism: no per-partition state.
     """
-    return discover_templates_from_cleaned(cleaned_frame(df, text_col, cfg), cfg)
+    return discover_templates_from_cleaned(pattern_counts(cleaned_frame(df, text_col, cfg)), cfg)
 
 
 def canonicalize_pool(templates: list[dict]) -> list[dict]:
@@ -134,40 +114,27 @@ def canonicalize_pool(templates: list[dict]) -> list[dict]:
 
 
 def make_matcher(pool: list[dict], cfg: PipelineConfig = DEFAULT_CONFIG):
-    """Build the broadcast-side matcher closure (executor-local tree).
-
-    Returns a function str→template_id used inside Arrow batches. The
-    tree is built lazily once per Python worker from the (small) pool
-    that rides along in the serialized closure.
-    """
+    """The reference's template search over ``pool``: a function
+    str→template_id that walks the prefix tree and falls back to an
+    exact lookup of the line's extracted pattern."""
     tree_cfg = cfg.tree
-    patterns = [(t["template_id"], t["pattern"]) for t in pool]
-    state: dict = {}
-
-    def _ensure() -> tuple[TemplateTree, dict[str, str]]:
-        if "tree" not in state:
-            tree = TemplateTree(
-                max_depth=tree_cfg.max_depth,
-                min_cluster_size=tree_cfg.min_cluster_size,
-                delimiter=tree_cfg.token_delimiter,
-                enable_fuzzy=tree_cfg.enable_fuzzy,
-                fuzzy_threshold=tree_cfg.fuzzy_threshold,
-            )
-            exact = {}
-            for tid, pattern in patterns:
-                tree.add_pattern(pattern, tid)
-                exact.setdefault(pattern, tid)
-            state["tree"] = tree
-            state["exact"] = exact
-        return state["tree"], state["exact"]
+    tree = TemplateTree(
+        max_depth=tree_cfg.max_depth,
+        min_cluster_size=tree_cfg.min_cluster_size,
+        delimiter=tree_cfg.token_delimiter,
+        enable_fuzzy=tree_cfg.enable_fuzzy,
+        fuzzy_threshold=tree_cfg.fuzzy_threshold,
+    )
+    exact: dict[str, str] = {}
+    for t in pool:
+        tree.add_pattern(t["pattern"], t["template_id"])
+        exact.setdefault(t["pattern"], t["template_id"])
 
     def match_one(cleaned: str) -> str:
-        tree, exact = _ensure()
         tid = tree.match(cleaned)
         if tid is not None:
             return tid
-        tid = exact.get(extract_template(cleaned, tree_cfg.token_delimiter))
-        return tid if tid is not None else UNKNOWN_ID
+        return exact.get(extract_template(cleaned, tree_cfg.token_delimiter), UNKNOWN_ID)
 
     return match_one
 
@@ -191,71 +158,44 @@ def assignment_map(pool: list[dict], cfg: PipelineConfig = DEFAULT_CONFIG) -> di
     return out
 
 
-def assign_templates(
-    df: DataFrame,
-    text_col: str,
-    pool: list[dict],
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    keep_cleaned: bool = True,
-    fallback: str = "unknown",
-    pre_cleaned: bool = False,
+def assign_patterns(
+    df: DataFrame, pool: list[dict], cfg: PipelineConfig = DEFAULT_CONFIG, pattern: str = "pattern"
 ) -> DataFrame:
-    """Pass 2: per-row template assignment — clean (JVM) → extract
-    pattern (JVM) → broadcast hash join against the driver-computed
-    pattern→tid map. Map-side only, whole-stage codegen, no shuffle of
-    the fact side, no Python workers.
-
-    ``fallback`` controls rows whose pattern is not in the map (only the
-    capped-out long tail in batch runs; possible new patterns in
-    incremental runs): "unknown" routes them to the fallback sink
-    (parser.py:388-398); "tree" runs the fuzzy tree matcher UDF on just
-    those rows (Arrow-batched, vectorized-masked so matched rows cost
-    nothing but transfer)."""
-    amap = assignment_map(pool, cfg)
+    """Append ``template_id`` to a frame with a pattern column (null for
+    invalid lines): a broadcast hash join against the driver-computed
+    pattern→tid map; a null or unmapped pattern gets 'unknown'
+    (parser.py:388-398)."""
     spark = df.sparkSession
     # map-side column aliased _map_pattern: a bare 'pattern' would make
     # drop('pattern') also take out an input column of that name
     # one slice: the map is pool-sized (bounded); a core-count-wide local
     # frame makes the broadcast build launch one task per core for nothing
     map_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(list(amap.items()), 1),
+        spark.sparkContext.parallelize(list(assignment_map(pool, cfg).items()), 1),
         schema="_map_pattern string, _tid string",
     )
+    joined = df.join(F.broadcast(map_df), df[pattern] == map_df["_map_pattern"], "left")
+    return joined.withColumn(
+        "template_id", F.coalesce(F.col("_tid"), F.lit(UNKNOWN_ID))
+    ).drop("_map_pattern", "_tid")
 
+
+def assign_templates(
+    df: DataFrame,
+    text_col: str,
+    pool: list[dict],
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    pre_cleaned: bool = False,
+) -> DataFrame:
+    """Pass 2: per-row template assignment — clean (JVM) → extract
+    pattern (JVM) → :func:`assign_patterns`. Map-side only, whole-stage
+    codegen, no shuffle of the fact side, no Python workers. Keeps the
+    ``cleaned``/``is_valid`` columns for the projection downstream."""
     cleaned = df if pre_cleaned else cleaned_frame(df, text_col, cfg)
     base = cleaned.withColumn(
-        "_pattern",
-        F.when(F.col("is_valid"), pattern_col(cfg)(F.col("cleaned"))),
+        "_pattern", F.when(F.col("is_valid"), extract_template_col(F.col("cleaned")))
     )
-    joined = base.join(
-        F.broadcast(map_df), base["_pattern"] == map_df["_map_pattern"], "left"
-    ).drop("_map_pattern")
-
-    if fallback == "tree":
-        matcher = make_matcher(pool, cfg)
-
-        @pandas_udf("string")
-        def _match_miss(tid: pd.Series, cleaned: pd.Series) -> pd.Series:
-            miss = tid.isna() & cleaned.notna()
-            if not miss.any():
-                return tid
-            memo: dict[str, str] = {}
-            out = tid.copy()
-            out[miss] = cleaned[miss].map(lambda c: memo.setdefault(c, matcher(c)))
-            return out
-
-        tid_col = F.when(~F.col("is_valid"), F.lit(UNKNOWN_ID)).otherwise(
-            _match_miss(F.col("_tid"), F.col("cleaned"))
-        )
-    else:
-        tid_col = F.when(F.col("is_valid"), F.coalesce(F.col("_tid"), F.lit(UNKNOWN_ID))).otherwise(
-            F.lit(UNKNOWN_ID)
-        )
-
-    out = joined.withColumn("template_id", tid_col).drop("_tid", "_pattern")
-    if not keep_cleaned:
-        out = out.drop("cleaned", "is_valid")
-    return out
+    return assign_patterns(base, pool, cfg, "_pattern").drop("_pattern")
 
 
 def pool_to_df(spark: SparkSession, pool: list[dict]) -> DataFrame:
@@ -307,7 +247,10 @@ def parse_and_count(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     persist_intermediate: bool = False,
 ) -> tuple[DataFrame, list[dict]]:
-    """Discover + assign + per-template counts (A1 — the parity target).
+    """Discover + assign: every row labeled, plus the pool — the per-row
+    path (parsed projection, sink writes). Counts alone follow from the
+    discovery aggregate without labeling a row
+    (``plans.queries.parse_route_agg_frame``).
 
     The two passes each evaluate clean+extract over the input. By default
     that work is RECOMPUTED — the right trade at 10^12 rows, where
@@ -315,44 +258,35 @@ def parse_and_count(
     re-derive it. ``persist_intermediate=True`` caches the projected
     (row, cleaned) frame between passes for memory-rich deployments;
     caller must unpersist via the returned frame."""
-    base = df
     if persist_intermediate:
-        base = cleaned_frame(df, text_col, cfg).persist()
-        pool = discover_templates_from_cleaned(base, cfg)
-        assigned = assign_templates(base, text_col, pool, cfg, pre_cleaned=True)
-        return assigned, pool
-    pool = discover_templates(base, text_col, cfg)
-    assigned = assign_templates(base, text_col, pool, cfg)
-    return assigned, pool
+        cleaned = cleaned_frame(df, text_col, cfg).persist()
+        pool = discover_templates_from_cleaned(pattern_counts(cleaned), cfg)
+        return assign_templates(cleaned, text_col, pool, cfg, pre_cleaned=True), pool
+    pool = discover_templates(df, text_col, cfg)
+    return assign_templates(df, text_col, pool, cfg), pool
 
 
 def discover_templates_from_cleaned(
-    cleaned_df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
+    counts: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> list[dict]:
-    """Discovery over a frame that already has cleaned/is_valid columns."""
+    """The pool from a cleaned frame's discovery aggregate
+    (:func:`pattern_counts`): top-N cap, exact dedup, similarity merge,
+    optional slot vote, canonical ids."""
     merge_cfg = cfg.merging
-    base = cleaned_df.filter(F.col("is_valid")).select(
-        pattern_col(cfg)(F.col("cleaned")).alias("pattern"), "cleaned"
-    )
-    if cfg.scale.collect_examples:
-        pattern_counts = base.groupBy("pattern").agg(
-            F.count(F.lit(1)).alias("count"), F.min("cleaned").alias("example")
-        )
-    else:
-        pattern_counts = base.groupBy("pattern").agg(
-            F.count(F.lit(1)).alias("count"), F.lit(None).cast("string").alias("example")
-        )
     # apply the top-N-by-count pool cap DISTRIBUTED (TakeOrderedAndProject)
     # so the driver only ever receives ≤ cap rows — a web corpus can have
     # more distinct patterns than driver memory; same deterministic
     # (-count, pattern) order the Python-side cap used
     cap = cfg.scale.broadcast_pool_max_templates
     rows = (
-        pattern_counts.orderBy(F.desc("count"), "pattern").limit(cap).collect()
+        counts.filter(F.col("pattern").isNotNull())
+        .orderBy(F.desc("count"), "pattern")
+        .limit(cap)
+        .collect()
     )
     templates = [
         {"pattern": r["pattern"], "count": r["count"], "confidence": 0.9,
-         "examples": [r["example"]] if r["example"] is not None else []}
+         "examples": [r["example"]]}
         for r in rows
     ]
     templates = dedup_pool_exact(templates)

@@ -277,7 +277,11 @@ def run_resumable(
             "statistics": ck.statistics,
         }
 
-    df = spark.read.parquet(*todo)
+    # tag each row with its file AT THE SCAN: input_file_name() names the
+    # file the scan task is reading when the expression runs, so after
+    # the joins and the batching Arrow variables UDF it names whichever
+    # file a task that packs several small files reached last
+    df = spark.read.parquet(*todo).withColumn("_src", F.input_file_name())
 
     # discover on the new slice only; merge into the stable pool
     discovered = discover_templates(df, text_col, cfg)
@@ -286,8 +290,8 @@ def run_resumable(
     )
 
     assigned = assign_templates(df, text_col, ck.pool, cfg)
-    parsed = parsed_projection(assigned, ck.pool, cfg)
-    routed = route(enrich(parsed), cfg).withColumn("_src", F.input_file_name())
+    parsed = parsed_projection(assigned, ck.pool)
+    routed = route(enrich(parsed), cfg)
     # three consumers below (lineage agg, sink write, per-run counts) —
     # persist the NEW-SLICE frame so the parse pipeline runs once, not
     # three times (the slice is the incremental delta, not the corpus)
@@ -329,7 +333,7 @@ def run_resumable(
     # global counts refresh below aggregates THESE — O(runs × templates)
     # — instead of re-scanning every historical sink row each run
     write_run_idempotent(
-        sink_counts(payload, cfg), f"{output_dir}/run_counts", run_key, catalog=None
+        sink_counts(payload), f"{output_dir}/run_counts", run_key, catalog=None
     )
     routed.unpersist()
     refresh_global_counts(spark, output_dir)

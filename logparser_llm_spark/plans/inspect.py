@@ -1,6 +1,6 @@
 """Physical-plan inspection: assert the plans we designed are the plans
-Spark runs. Used by tests and by `python -m logparser_llm_spark.plans.inspect`
-to dump judge-readable evidence (BENCH/PLANS.md).
+Spark runs. Used by tests and by ``bench_extra.py --plans-only``, which
+dumps the registered queries' plans (BENCH/PLANS.md).
 """
 
 from __future__ import annotations
@@ -10,12 +10,6 @@ from pyspark.sql import DataFrame
 
 def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def plan_facts(df: DataFrame) -> dict[str, bool | int]:
@@ -34,48 +28,3 @@ def plan_facts(df: DataFrame) -> dict[str, bool | int]:
         "partial_aggregate": "partial_" in plan,
         "exchanges": plan.count("Exchange"),
     }
-
-
-def _main() -> None:
-    import sys
-
-    sys.path.insert(0, ".")
-    from ..session import build_session
-    from .queries import QUERIES
-
-    spark = build_session("inspect", cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    sf = "/root/testdata/sf0.01"
-    lines = ["# Physical plans (sf0.01)\n"]
-    for name in ["parse_route_agg", "enrich_lang_join", "pricing_summary",
-                 "ngram_jaccard", "ann_topk", "user_sessions",
-                 "embedding_near_dup", "simhash_near_dup", "parsed_projection",
-                 "knn_join", "ivf_ann", "ngram_topk", "stratified_sample",
-                 "parse_route_agg_slotvote",
-                 # round 5
-                 "slotvote_routes", "parse_route_agg_multisplit",
-                 "image_features_agg", "audio_decode",
-                 "pagerank", "url_canonicalize", "html_extract",
-                 "warc_extract", "bloom_frontier", "charset_decode",
-                 "anchor_text_agg", "robots_filter", "web_domain_rollup",
-                 # round 5 (final)
-                 "quantile_sketch", "heavy_hitters", "cdx_index",
-                 "lm_quality", "crawl_diff", "html_template_cluster",
-                 "bpe_tokenize", "main_content", "cdc_dedup",
-                 "decontaminate", "seq_pack", "kmeans",
-                 "hybrid_rrf", "training_mix", "training_pipeline",
-                 "semantic_dedup",
-                 # round 5 (closing arcs)
-                 "triangle_count", "dedup_best", "gopher_rules",
-                 "gopher_repetition", "c4_clean", "inverted_index",
-                 "shard_export", "incremental_dedup"]:
-        df = QUERIES[name][0](spark, sf)
-        lines.append(f"\n## {name}\n")
-        lines.append(f"facts: `{plan_facts(df)}`\n")
-        lines.append("```\n" + formatted_plan(df)[:6000] + "\n```\n")
-    print("".join(lines))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    _main()

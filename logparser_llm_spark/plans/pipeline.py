@@ -3,7 +3,7 @@
 The Spark generalization of the reference's ``parse_file`` flow
 (reference core/parser.py:241-304): scan → clean/match/cluster → project,
 extended per the north rule with broadcast-join enrichment, hash fan-out
-routing to per-sink tables, and salted per-sink aggregate counts.
+routing to per-sink tables, and per-sink aggregate counts.
 
 Scale design notes (explicit partitioning / shuffle / skew handling):
 
@@ -13,13 +13,11 @@ Scale design notes (explicit partitioning / shuffle / skew handling):
 - **Routing is a pure map-side column** (``sink_id = md5-bucket of
   template_id``) + ONE partitioned write (``partitionBy('sink_id')``) —
   a single pass, not K filtered scans of the input.
-- **Per-sink counts are salted**: boilerplate templates own a huge share
-  of a web corpus, so the aggregate goes (template_id, salt) partial →
-  template_id final. Spark's map-side partial aggregation already
-  absorbs most count-skew; the explicit salt stage guards the case
-  where the *number of distinct groups per mapper* is so small that a
-  single reducer would own the hot key during the final agg, and it is
-  the documented pattern the north rule asks for.
+- **Per-sink counts are a plain groupBy**: boilerplate templates own a
+  huge share of a web corpus, but Spark's map-side partial aggregation
+  collapses each mapper's rows to one row per (sink, template) before
+  the shuffle, so a hot template costs the final reducer one row per
+  mapper, not one per line.
 - **AQE** (adaptive coalescing + skew-join splitting) is enabled in
   session defaults (session.py) as the runtime backstop.
 """
@@ -154,16 +152,11 @@ def make_variables_udf():
     return _vars
 
 
-def parsed_projection(
-    assigned: DataFrame,
-    pool: list[dict],
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    include_variables: bool | None = None,
-) -> DataFrame:
+def parsed_projection(assigned: DataFrame, pool: list[dict]) -> DataFrame:
     """P1 complete: append the ParsedLog fields the reference's result
     rows carry (parser.py:285-297, log_entry.py:80-125) to an assigned
     frame: ``template_pattern``, ``confidence``, ``cache_hit``,
-    ``used_llm`` and (optionally) the per-row ``variables`` map.
+    ``used_llm`` and the per-row ``variables`` map.
 
     - pattern/confidence come from a BROADCAST join against the (small)
       pool dim — no shuffle of the fact side;
@@ -173,12 +166,8 @@ def parsed_projection(
       true iff the row matched the broadcast pool; ``used_llm`` is
       constant False (the LLM is replaced by the deterministic extractor);
     - ``variables`` is the one Python (Arrow-batched) stage in the
-      pipeline; at 10^12 rows disable it via
-      ``cfg.scale.include_variables=False`` unless the per-row variable
-      map is actually consumed downstream.
+      pipeline; counts-only callers never build this projection.
     """
-    if include_variables is None:
-        include_variables = cfg.scale.include_variables
     spark = assigned.sparkSession
     pool_dim = pool_to_df(spark, pool).select(
         "template_id",
@@ -200,12 +189,9 @@ def parsed_projection(
         .withColumn("used_llm", F.lit(False))
         .drop("_pool_pattern", "_pool_confidence")
     )
-    if include_variables:
-        out = out.withColumn(
-            "variables",
-            make_variables_udf()(F.col("cleaned"), F.col("template_pattern")),
-        )
-    return out
+    return out.withColumn(
+        "variables", make_variables_udf()(F.col("cleaned"), F.col("template_pattern"))
+    )
 
 
 def route(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -216,48 +202,12 @@ def route(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
     return df.withColumn("sink_id", sink_id_col(F.col("template_id"), cfg.scale.num_sinks))
 
 
-def salted_counts(
-    df: DataFrame,
-    keys: list[str],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase skew-safe count: groupBy(keys + salt) partial →
-    groupBy(keys) final. Output column: ``doc_count``."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.monotonically_increasing_id()), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy(*keys, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias("doc_count"))
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: list[str],
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-tolerant equality join (inner/left, ``skewed`` as left): the
-    hot side gets a per-row salt, the other side is replicated once per
-    salt value, and the join key becomes (key, salt) — a hot key's rows
-    spread over ``salt_buckets`` reducers instead of one. Semantically
-    identical to ``skewed.join(other, on, how)`` (each skewed row matches
-    exactly its own salt replica; equality is a test). AQE's skew-join
-    split is the runtime backstop; this is the explicit form for when the
-    skew is known ahead of time (e.g. joining routed rows back against a
-    dimension keyed by a boilerplate-heavy template_id)."""
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    left = skewed.withColumn("_salt", salt)
-    right = other.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    return left.join(right, [*on, "_salt"], how).drop("_salt")
-
-
-def sink_counts(routed: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
+def sink_counts(routed: DataFrame) -> DataFrame:
     """Per-sink per-template counts (A1 — the parity target)."""
-    return salted_counts(routed, ["sink_id", "template_id"], cfg.scale.salt_buckets).orderBy(
-        "sink_id", "template_id"
+    return (
+        routed.groupBy("sink_id", "template_id")
+        .agg(F.count(F.lit(1)).alias("doc_count"))
+        .orderBy("sink_id", "template_id")
     )
 
 
@@ -272,7 +222,7 @@ def parse_enrich_route(
     if pool is None:
         pool = discover_templates(df, text_col, cfg)
     assigned = assign_templates(df, text_col, pool, cfg)
-    parsed = parsed_projection(assigned, pool, cfg)
+    parsed = parsed_projection(assigned, pool)
     enriched = enrich(parsed)
     return route(enriched, cfg), pool
 
@@ -355,9 +305,9 @@ def run_pipeline(
         write_sink_table(payload, f"{output_dir}/sinks", mode="overwrite")
         pool_to_df(spark, pool).write.mode("overwrite").json(f"{output_dir}/pool")
         written = read_sink_table(spark, f"{output_dir}/sinks")
-        counts = sink_counts(written, cfg)
+        counts = sink_counts(written)
     else:
-        counts = sink_counts(routed, cfg)
+        counts = sink_counts(routed)
 
     counts_rows = counts.collect()
     lineage = dict(obs.get)  # the collect/write above ran the observed plan

@@ -24,6 +24,7 @@ DuckDB oracle, not just a rows-only check.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
-from ..config import DEFAULT_CONFIG
+from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..functions.cleaning import (
     clean_col,
     extract_log_level_col,
@@ -48,7 +49,7 @@ from ..functions.text import (
     token_count_ws,
     STOPWORDS,
 )
-from ..operators.cluster import parse_and_count, pattern_col
+from ..operators import cluster
 from ..operators.dedup import (
     dedup_exact,
     minhash_lsh_pairs,
@@ -59,6 +60,12 @@ from ..operators.similarity import cosine_expr
 from .pipeline import LANG_DIM, enrich, route
 
 NUM_SINKS = 8
+
+# the flagship with slot-voting generalization on (operators/merging.py:
+# generalize_pool) — the slot-vote queries' one config
+SLOT_VOTING = replace(
+    DEFAULT_CONFIG, merging=replace(DEFAULT_CONFIG.merging, enable_slot_voting=True)
+)
 
 
 def _t(sf_dir: str, name: str) -> str:
@@ -216,18 +223,16 @@ def q_tokenize_stats_sql(sf: str) -> str:
 def q_template_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic extractor (LLM replacement) per event line.
 
-    Registered path is the JVM ``extract_template_col`` (whole-stage
-    codegen; token-for-token equality with the Python extractor is
-    asserted in tests). ``scale.arrow_parity_mode`` flips to the
-    Arrow/Python-``re`` UDF via :func:`~..operators.cluster.pattern_col`.
-    """
+    The JVM ``extract_template_col`` (whole-stage codegen;
+    token-for-token equality with the Python extractor is asserted in
+    tests)."""
     # r6: fan out the one-split scan before the extract regex (guide §2.5)
     ev = _fan_out(_read(spark, sf_dir, "events").select(
         "event_id", event_log_line_col().alias("__line")
     ))
     cleaned = clean_col(F.col("__line"), DEFAULT_CONFIG.preprocessing)
     return ev.select(
-        "event_id", pattern_col()(cleaned).alias("pattern")
+        "event_id", cluster.pattern_col()(cleaned).alias("pattern")
     )
 
 
@@ -256,25 +261,30 @@ def q_template_prefix_buckets_sql(sf: str) -> str:
     """
 
 
-def parse_route_agg_frame(lines: DataFrame, text_col: str = "text") -> DataFrame:
-    """The flagship pipeline body over ANY line frame: discovery, driver
+def parse_route_agg_frame(
+    lines: DataFrame, text_col: str = "text", cfg: PipelineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """The counts-only flagship over ANY line frame: discovery, driver
     merge, broadcast assignment, md5 fan-out routing, per-sink counts.
-    Shared by the registered query and bench.py's multi-split flagship so
-    the two always measure the identical plan.
+    Shared by the registered flagship queries and bench.py's multi-split
+    flagship so they always measure the identical plan.
 
-    r6: ``persist_intermediate=True`` — the two passes (discover,
-    assign) each re-derived clean+extract over the corpus; caching the
-    projected cleaned frame halves the regex work per run (guide §1.2
-    step 1: don't compute things twice). The recompute-vs-materialize
-    trade is documented on ``parse_and_count``; at petabyte scale the
-    cleaned projection is corpus-sized and MEMORY_AND_DISK pays one
-    spill write + read (~1 µs/row) instead of a second regex pass
-    (~30 µs/row) — the cheaper side at any scale with local disk."""
-    assigned, _pool = parse_and_count(lines, text_col, persist_intermediate=True)
+    Work happens once per pattern, not once per line (the paper's one
+    LLM call per template): ONE clean+extract pass aggregates the corpus
+    to ``(pattern-or-null, count, example)`` and only that pattern-grain
+    aggregate is held. Discovery reads it for the pool (same cap, merge,
+    slot vote and canonical ids as every other caller), the assignment
+    map is broadcast-joined to it, and the routed aggregate's counts sum
+    into ``doc_count``. Equal to the per-row path (assign every row,
+    route, count) because every line of a pattern gets its pattern's
+    id — asserted in tests. The held aggregate is pattern-sized and stays
+    cached until the caller unpersists it or clears the cache."""
+    counts = cluster.pattern_counts(cluster.cleaned_frame(lines, text_col, cfg)).persist()
+    pool = cluster.discover_templates_from_cleaned(counts, cfg)
     return (
-        route(assigned)
+        route(cluster.assign_patterns(counts, pool, cfg), cfg)
         .groupBy("sink_id", "template_id")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
+        .agg(F.sum("count").alias("doc_count"))
     )
 
 
@@ -400,24 +410,8 @@ def q_parse_route_agg_slotvote(spark: SparkSession, sf_dir: str) -> DataFrame:
     these the same way), collapsing the pool to one template. That is
     the documented trade of the generalizing config, and why the
     DEFAULT flagship keeps slot voting off."""
-    from dataclasses import replace
-
-    from ..config import DEFAULT_CONFIG
-    from ..operators.cluster import parse_and_count
-    from ..plans.pipeline import route
-
-    cfg = replace(
-        DEFAULT_CONFIG, merging=replace(DEFAULT_CONFIG.merging, enable_slot_voting=True)
-    )
-    # r6: fan out the one-split scan + share the cleaned frame between
-    # the discover/assign passes (same rationale as q_parse_route_agg)
     ev = _fan_out(_read(spark, sf_dir, "events").select(event_log_line_col().alias("text")))
-    assigned, _pool = parse_and_count(ev, "text", cfg, persist_intermediate=True)
-    return (
-        route(assigned)
-        .groupBy("sink_id", "template_id")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-    )
+    return parse_route_agg_frame(ev, "text", SLOT_VOTING)
 
 
 def q_parse_route_agg_slotvote_sql(sf: str) -> str:
@@ -467,11 +461,6 @@ def q_slotvote_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleanly`` — the oracle derives each row's voted pattern from the
     same parity/branch columns, ranks distinct patterns for canonical
     ids, and compares sinks/ids/counts exactly."""
-    from dataclasses import replace
-
-    from ..config import DEFAULT_CONFIG as _CFG
-
-    cfg = replace(_CFG, merging=replace(_CFG.merging, enable_slot_voting=True))
     ev = _read(spark, sf_dir, "events")
     disc = F.when(F.col("user_id") % 2 == 0, F.lit("alpha")).otherwise(F.lit("beta"))
     # coalesce keeps the token COUNT fixed under a NULL event_type
@@ -485,15 +474,8 @@ def q_slotvote_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(
         F.concat_ws(" ", F.lit("worker"), etype, F.lit("finished cleanly"))
     )
-    # r6: fan out the one-split scan + share the cleaned frame between
-    # the discover/assign passes (same rationale as q_parse_route_agg)
-    lines = _fan_out(ev.select(line.alias("text")))
-    assigned, _pool = parse_and_count(lines, "text", cfg, persist_intermediate=True)
-    return (
-        route(assigned)
-        .groupBy("sink_id", "template_id")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-    )
+    # r6: fan out the one-split scan (same rationale as q_parse_route_agg)
+    return parse_route_agg_frame(_fan_out(ev.select(line.alias("text"))), "text", SLOT_VOTING)
 
 
 def q_slotvote_routes_sql(sf: str) -> str:
@@ -2236,16 +2218,16 @@ def q_parsed_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (reference parser.py:285-297 / log_entry.py:80-125) —
     template_id + template_pattern + confidence + extracted variables +
     cache_hit, over the constructed event corpus."""
-    from ..operators.cluster import parse_and_count
     from .pipeline import parsed_projection
 
     ev = _read(spark, sf_dir, "events")
     # r6: fan out the one-split scan + share the cleaned frame between
-    # the discover/assign passes (same rationale as q_parse_route_agg);
-    # the Arrow variable-extraction stage downstream inherits the width
+    # the discover/assign passes — per-row output needs both passes, so
+    # the cleaned frame is cached rather than re-derived; the Arrow
+    # variable-extraction stage downstream inherits the width
     lines = _fan_out(ev.select("event_id", event_log_line_col().alias("text")))
-    assigned, pool = parse_and_count(lines, "text", persist_intermediate=True)
-    parsed = parsed_projection(assigned, pool, include_variables=True)
+    assigned, pool = cluster.parse_and_count(lines, "text", persist_intermediate=True)
+    parsed = parsed_projection(assigned, pool)
     return parsed.select(
         "event_id",
         "template_id",

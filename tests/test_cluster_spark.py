@@ -18,7 +18,7 @@ from logparser_llm_spark.operators.cluster import (
 from logparser_llm_spark.reference_oracle import SequentialParser
 from logparser_llm_spark.sources.synth import generate_log_lines
 
-TEST_CFG = PipelineConfig(scale=ScaleConfig(discovery_partitions=8))
+TEST_CFG = PipelineConfig()
 
 
 @pytest.fixture(scope="module")
@@ -103,18 +103,16 @@ def test_corpus_grouping_close_to_sequential_oracle(spark, log_df):
 def test_assignment_is_partition_invariant(spark, log_df):
     """Same clustering at any parallelism: the local[8] ≡ local[32]
     precondition for the scaling-efficiency claim."""
-    cfg_a = PipelineConfig(scale=ScaleConfig(discovery_partitions=2))
-    cfg_b = PipelineConfig(scale=ScaleConfig(discovery_partitions=16))
-    pool_a = discover_templates(log_df.repartition(2), "text", cfg_a)
-    pool_b = discover_templates(log_df.repartition(13), "text", cfg_b)
+    pool_a = discover_templates(log_df.repartition(2), "text", TEST_CFG)
+    pool_b = discover_templates(log_df.repartition(13), "text", TEST_CFG)
 
     a = {
         (r["url"], r["line_no"]): r["template_id"]
-        for r in assign_templates(log_df, "text", pool_a, cfg_a).collect()
+        for r in assign_templates(log_df, "text", pool_a, TEST_CFG).collect()
     }
     b = {
         (r["url"], r["line_no"]): r["template_id"]
-        for r in assign_templates(log_df, "text", pool_b, cfg_b).collect()
+        for r in assign_templates(log_df, "text", pool_b, TEST_CFG).collect()
     }
     ga = grouping_accuracy([a[k] for k in sorted(a)], [b[k] for k in sorted(b)])
     assert ga == pytest.approx(1.0)
@@ -166,6 +164,50 @@ def test_persist_intermediate_equals_default(spark, log_df):
     k1 = {(r["url"], r["line_no"]): r["template_id"] for r in a1.collect()}
     k2 = {(r["url"], r["line_no"]): r["template_id"] for r in a2.collect()}
     assert k1 == k2
+
+
+@pytest.mark.parametrize("variant", ["pool_cap_hit", "slot_voting"])
+def test_flagship_counts_equal_per_row_path(spark, log_df, variant):
+    """The counts-only flagship (one pass to the pattern grain, the map
+    joined to that aggregate) equals assigning every row, routing and
+    counting — with invalid and null-text lines in the corpus, on the
+    pool-cap branch (the tail routes to 'unknown') and with slot voting."""
+    from dataclasses import replace
+
+    from logparser_llm_spark.operators.cluster import cleaned_frame, parse_and_count, pattern_counts
+    from logparser_llm_spark.plans.pipeline import route
+    from logparser_llm_spark.plans.queries import parse_route_agg_frame
+
+    junk = spark.createDataFrame(
+        [("short",), ("!!!???...",), (None,), ("",), ("   ",)] * 2, "text string"
+    )
+    df = log_df.select("text").unionByName(junk)
+    if variant == "pool_cap_hit":
+        patterns = pattern_counts(cleaned_frame(df, "text")).filter(F.col("pattern").isNotNull())
+        cap = patterns.count() // 2
+        cfg = PipelineConfig(scale=ScaleConfig(broadcast_pool_max_templates=cap))
+    else:
+        cfg = replace(TEST_CFG, merging=replace(TEST_CFG.merging, enable_slot_voting=True))
+
+    assigned, pool = parse_and_count(df, "text", cfg)
+    want = {
+        (r["sink_id"], r["template_id"]): r["count"]
+        for r in route(assigned, cfg).groupBy("sink_id", "template_id").count().collect()
+    }
+    got = {
+        (r["sink_id"], r["template_id"]): r["doc_count"]
+        for r in parse_route_agg_frame(df, "text", cfg).collect()
+    }
+    assert got == want
+    assert sum(got.values()) == df.count()
+    unknown = sum(v for (_, t), v in got.items() if t == "unknown")
+    if variant == "pool_cap_hit":
+        assert len(pool) <= cap
+        assert unknown > 10  # the 10 invalid lines plus the capped tail
+    else:
+        assert unknown == 10
+        # the vote merged patterns: the map joins pre-merge source patterns
+        assert any(len(t["sources"]) > 1 for t in pool)
 
 
 def test_pool_to_df_roundtrip(spark, log_df):

@@ -64,6 +64,23 @@ performance:
     assert cfg.scale == DEFAULT_CONFIG.scale
     assert cfg.preprocessing.normalize_paths is True
 
+    # a config written for an older release still sets scale keys that
+    # no longer exist: they are ignored like any unknown key
+    old_scale = tmp_path / "old_scale.yaml"
+    old_scale.write_text(
+        """
+scale:
+  shuffle_partitions: 64
+  discovery_partitions: 16
+  salt_buckets: 8
+  arrow_max_records_per_batch: 5000
+  arrow_parity_mode: true
+  collect_examples: false
+  include_variables: false
+"""
+    )
+    assert from_yaml(str(old_scale)) == DEFAULT_CONFIG
+
 
 def test_env_var_interpolation(monkeypatch):
     monkeypatch.setenv("FUZZY", "0.65")

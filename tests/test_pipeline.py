@@ -1,4 +1,4 @@
-"""End-to-end pipeline tests: enrich, route, salted counts, fan-out write,
+"""End-to-end pipeline tests: enrich, route, per-sink counts, fan-out write,
 and checkpoint/resume without reprocessing."""
 
 import os
@@ -14,12 +14,11 @@ from logparser_llm_spark.plans.pipeline import (
     enrich,
     parse_enrich_route,
     run_pipeline,
-    salted_counts,
     sink_counts,
 )
 from logparser_llm_spark.sources.synth import generate_pages
 
-CFG = PipelineConfig(scale=ScaleConfig(num_sinks=4, salt_buckets=4))
+CFG = PipelineConfig(scale=ScaleConfig(num_sinks=4))
 
 
 @pytest.fixture(scope="module")
@@ -49,24 +48,11 @@ def test_enrich_broadcast_join(spark, pages):
 
 def test_route_and_counts(spark, pages):
     routed, pool = parse_enrich_route(pages, "text", CFG)
-    counts = sink_counts(routed, CFG).collect()
+    counts = sink_counts(routed).collect()
     assert sum(r["doc_count"] for r in counts) == pages.count()
     # sink ids are the portable md5 buckets
     for r in counts:
         assert r["sink_id"] == sink_id(r["template_id"], CFG.scale.num_sinks)
-
-
-def test_salted_counts_equals_plain_groupby(spark, pages):
-    routed, _ = parse_enrich_route(pages, "text", CFG)
-    salted = {
-        (r["sink_id"], r["template_id"]): r["doc_count"]
-        for r in salted_counts(routed, ["sink_id", "template_id"], 8).collect()
-    }
-    plain = {
-        (r["sink_id"], r["template_id"]): r["count"]
-        for r in routed.groupBy("sink_id", "template_id").count().collect()
-    }
-    assert salted == plain
 
 
 def test_run_pipeline_with_fanout_write(spark, pages, tmp_path):
@@ -205,6 +191,32 @@ def test_manifest_keys_match_input_file_name(spark, tmp_path):
     assert listed == scanned
 
 
+def test_manifest_rows_are_per_file_in_one_run(spark, tmp_path):
+    """Files of different sizes read in ONE run: each file's manifest
+    counters are its own rows. Eight small files make the scan pack
+    several into one task, where a file name read after the Arrow
+    variables stage names whichever file the scan reached last."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    from logparser_llm_spark.plans.checkpoint import list_input_files
+
+    src = str(tmp_path / "src")
+    ck = str(tmp_path / "ck")
+    out = str(tmp_path / "out")
+    for i in range(8):
+        generate_pages(spark, 5 + 7 * i, seed=31 + i).coalesce(1).write.mode("append").parquet(src)
+    files = list_input_files(spark, src)
+    sizes = {f: pq.ParquetFile(urlparse(f).path).metadata.num_rows for f in files}
+    assert len(set(sizes.values())) == 8
+
+    r = run_resumable(spark, src, ck, out)
+    assert sorted(r["processed"]) == sorted(files)
+    manifest = Checkpoint.load(ck)
+    assert {f: e["rows_total"] for f, e in manifest.completed.items()} == sizes
+
+
 def test_crashed_sink_append_is_idempotent(spark, tmp_path):
     """A run that died between the sink write and the manifest save must
     not duplicate rows on retry (ADVICE r1): the journaled pending_run
@@ -295,27 +307,6 @@ def test_parsing_statistics_derived_rates(spark):
     # per-row mean over ALL rows: 8 matched at 0.9, 2 unknown at 0.0
     assert st["average_confidence"] == pytest.approx(0.72)
     assert st["cost_usd"] == 0.0
-
-
-def test_salted_join_equals_plain_join(spark):
-    """salted_join must be row-multiset-identical to the plain join on a
-    skewed key distribution, for inner and left."""
-    import random
-
-    from logparser_llm_spark.plans.pipeline import salted_join
-
-    rng = random.Random(7)
-    # 90% of fact rows share one hot key; some keys miss the dim
-    fact = [(("hot" if rng.random() < 0.9 else f"k{rng.randint(0, 20)}"), i)
-            for i in range(2000)]
-    dim = [(f"k{i}", f"v{i}") for i in range(15)] + [("hot", "vhot")]
-    f = spark.createDataFrame(fact, "key string, fid bigint")
-    d = spark.createDataFrame(dim, "key string, val string")
-
-    for how in ("inner", "left"):
-        plain = sorted(tuple(r) for r in f.join(d, ["key"], how).collect())
-        salted = sorted(tuple(r) for r in salted_join(f, d, ["key"], 8, how).collect())
-        assert salted == plain, how
 
 
 def test_zero_row_input_file_is_marked_complete(spark, tmp_path):

@@ -36,6 +36,55 @@ def test_assignment_is_jvm_only_broadcast_join(spark, pages):
     assert "EvalPython" not in plan_above_scan
 
 
+def _plan_nodes(node):
+    """Every physical node of an executed plan, descending through AQE
+    query stages but not into a cached relation's own plan (what an
+    InMemoryTableScan reads is its storage blocks, not that plan)."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _plan_nodes(node.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return [node] + _plan_nodes(node.plan())
+    children = node.children()
+    return [node] + [n for i in range(children.size()) for n in _plan_nodes(children.apply(i))]
+
+
+def test_flagship_counts_read_only_the_pattern_aggregate(spark, tmp_path):
+    """The counts-only flagship holds the discovery aggregate and nothing
+    else: once ``parse_route_agg_frame`` returns, its executed plan has no
+    file scan (it reads the held aggregate), the only storage it adds
+    holds ≤ distinct patterns + 1 (null) rows, and the one broadcast join
+    streams that aggregate, not lines."""
+    from logparser_llm_spark.operators.cluster import cleaned_frame, pattern_counts
+    from logparser_llm_spark.plans.queries import parse_route_agg_frame
+    from logparser_llm_spark.sources.synth import generate_log_lines
+
+    src = str(tmp_path / "lines")
+    generate_log_lines(spark, 200, seed=43, partitions=4).write.parquet(src)
+    lines = spark.read.parquet(src)
+    n_patterns = pattern_counts(cleaned_frame(lines, "text")).filter(F.col("pattern").isNotNull()).count()
+
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    out = parse_route_agg_frame(lines)
+    rows = out.collect()
+    assert sum(r["doc_count"] for r in rows) == lines.count()
+
+    nodes = _plan_nodes(out._jdf.queryExecution().executedPlan())
+    names = [n.getClass().getSimpleName() for n in nodes]
+    assert not [n for n in names if "Scan" in n and n not in ("InMemoryTableScanExec", "RDDScanExec")], names
+    cached = [n for n in nodes if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
+    assert len(cached) == 1, names
+    held = cached[0].relation().cacheBuilder()
+    assert held.rowCountStats().value() <= n_patterns + 1
+    added = {i.id() for i in sc.getRDDStorageInfo()} - before
+    assert added == {held.cachedColumnBuffers().id()}
+    joins = [n for n in nodes if n.getClass().getSimpleName() == "BroadcastHashJoinExec"]
+    assert len(joins) == 1, names
+    streamed = joins[0].left() if joins[0].buildSide().toString() == "BuildRight" else joins[0].right()
+    assert "InMemoryTableScanExec" in [n.getClass().getSimpleName() for n in _plan_nodes(streamed)]
+
+
 def test_enrich_joins_are_broadcast(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
         "url", F.lit("https://example.com/x")

@@ -1,5 +1,5 @@
-"""Sink abstraction fallback, pool-cap behavior, parity-mode pipeline,
-and skewed-corpus aggregation."""
+"""Sink abstraction fallback, pool-cap behavior, and skewed-corpus
+aggregation."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +9,7 @@ from logparser_llm_spark.operators.cluster import (
     assign_templates,
     discover_templates,
 )
-from logparser_llm_spark.plans.pipeline import salted_counts
+from logparser_llm_spark.plans.pipeline import sink_counts
 from logparser_llm_spark.sources.sinks import (
     iceberg_catalog,
     read_sink_table,
@@ -45,31 +45,10 @@ def test_pool_cap_routes_tail_to_unknown(spark):
     assert counts["unknown"] < lines.count() / 2
 
 
-def test_parity_mode_pipeline_equals_default(spark):
-    """arrow_parity_mode (Python-re UDF path) must produce identical
-    assignments to the default JVM path on the synthetic corpus."""
-    lines = generate_log_lines(spark, 150, seed=29).cache()
-    default_cfg = PipelineConfig()
-    parity_cfg = PipelineConfig(scale=ScaleConfig(arrow_parity_mode=True))
-    pool_d = discover_templates(lines, "text", default_cfg)
-    pool_p = discover_templates(lines, "text", parity_cfg)
-    assert [(t["template_id"], t["pattern"]) for t in pool_d] == [
-        (t["template_id"], t["pattern"]) for t in pool_p
-    ]
-    a_d = {
-        (r["url"], r["line_no"]): r["template_id"]
-        for r in assign_templates(lines, "text", pool_d, default_cfg).collect()
-    }
-    a_p = {
-        (r["url"], r["line_no"]): r["template_id"]
-        for r in assign_templates(lines, "text", pool_p, parity_cfg).collect()
-    }
-    assert a_d == a_p
-
-
 def test_salted_counts_on_skewed_corpus(spark):
-    """80% of rows share one key (web-boilerplate skew); the salted
-    two-phase aggregate must still be exact."""
+    """80% of rows share one key (web-boilerplate skew); the per-sink
+    counts (a plain groupBy, map-side partial aggregation absorbing the
+    hot key) must still be exact."""
     skewed = spark.range(50_000).select(
         F.when(F.col("id") % 5 != 0, F.lit("tmpl_boilerplate"))
         .otherwise(F.concat(F.lit("tmpl_"), (F.col("id") % 97).cast("string")))
@@ -78,7 +57,7 @@ def test_salted_counts_on_skewed_corpus(spark):
     )
     got = {
         (r["sink_id"], r["template_id"]): r["doc_count"]
-        for r in salted_counts(skewed, ["sink_id", "template_id"], 16).collect()
+        for r in sink_counts(skewed).collect()
     }
     want = {
         (r["sink_id"], r["template_id"]): r["count"]

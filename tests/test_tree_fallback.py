@@ -1,6 +1,6 @@
-"""The fallback="tree" assignment path: rows whose extract-pattern is
-absent from the broadcast map run the fuzzy tree walk (incremental-corpus
-scenario — new data against an old pool)."""
+"""New data against an old pool (incremental-corpus scenario): rows whose
+extract-pattern is absent from the broadcast map route to 'unknown', even
+when their tokens would fuzzy-match an old template's tree path."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -39,29 +39,3 @@ def test_unknown_fallback_without_tree(spark, pool):
     out = {r["i"]: r["template_id"] for r in assign_templates(df, "text", pool).collect()}
     assert out[0] == "unknown"  # exact-map miss, no tree
     assert out[1] == "unknown"
-
-
-def test_tree_fallback_fuzzy_matches(spark, pool):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(NEW_LINES)], "i int, text string")
-    out = {
-        r["i"]: r["template_id"]
-        for r in assign_templates(df, "text", pool, fallback="tree").collect()
-    }
-    failed_tid = next(
-        t["template_id"] for t in pool if t["pattern"].startswith("Failed to connect")
-    )
-    assert out[0] == failed_tid  # fuzzy walk recovered the old template
-    assert out[1] == "unknown"  # genuinely new shape still falls through
-
-
-def test_tree_fallback_does_not_change_exact_hits(spark, pool):
-    """Rows covered by the broadcast map get identical ids in both modes
-    (the masked UDF must be a no-op for them)."""
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(OLD_CORPUS)], "i int, text string")
-    plain = {r["i"]: r["template_id"] for r in assign_templates(df, "text", pool).collect()}
-    tree = {
-        r["i"]: r["template_id"]
-        for r in assign_templates(df, "text", pool, fallback="tree").collect()
-    }
-    assert plain == tree
-    assert "unknown" not in plain.values()
