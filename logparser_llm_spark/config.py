@@ -26,7 +26,6 @@ class PreprocessingConfig:
     normalize_numbers: bool = True
     normalize_paths: bool = True
     lowercase: bool = False
-    remove_duplicates: bool = True
 
 
 @dataclass(frozen=True)

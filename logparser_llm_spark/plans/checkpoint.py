@@ -17,7 +17,12 @@ per-partition lineage + metrics":
   patterns get fresh ids appended after the existing ones;
 - resume = set-difference(input files, manifest) → only new files are
   read (Spark never even scans completed ones: the file list is pruned
-  before ``spark.read``), their routed rows appended, counts merged.
+  before ``spark.read``), their routed rows appended, counts merged;
+- one slice step does the work: ``parse_slice`` (discover → grow the
+  stable pool → assign → project → enrich → route) and ``write_slice``
+  (the run-keyed sink and count writes). ``run_resumable`` runs it per
+  set of new files, ``streaming.incremental.StreamingParser`` per
+  micro-batch.
 """
 
 from __future__ import annotations
@@ -33,9 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
-from ..operators.cluster import assign_templates, discover_templates
+from ..operators.cluster import discover_templates
 from ..operators.merging import dedup_pool_exact
-from .pipeline import enrich, parsed_projection, route, sink_counts
+from .pipeline import parse_enrich_route, sink_counts
 
 MANIFEST_NAME = "manifest.json"
 POOL_NAME = "pool.json"
@@ -131,6 +136,32 @@ def _merge_into_pool(existing: list[dict], discovered: list[dict]) -> list[dict]
     return out
 
 
+def parse_slice(
+    df: DataFrame, text_col: str, pool: list[dict], cfg: PipelineConfig
+) -> tuple[DataFrame, list[dict]]:
+    """The online-learning step for one new slice (a run's files or a
+    micro-batch): discover on the slice only, grow the stable pool
+    (existing ids kept, new patterns appended), then assign → ParsedLog
+    projection → enrich → route against it. Returns (routed, pool)."""
+    discovered = discover_templates(df, text_col, cfg)
+    pool = _merge_into_pool(pool, discovered) if pool else discovered
+    return parse_enrich_route(df, text_col, cfg, pool)
+
+
+def write_slice(routed: DataFrame, output_dir: str, run_key: str) -> None:
+    """Write a routed slice under ``run=<run_key>``: its sink rows
+    (partitioned by ``sink_id``) and its per-template counts. Both writes
+    overwrite their run dir, so retrying a key replaces, never duplicates.
+    The per-run counts share the run dir's lifecycle; the global counts
+    refresh sums THESE — O(runs × templates) — instead of re-scanning
+    every historical sink row."""
+    from ..sources.sinks import write_run_idempotent
+
+    payload = routed.drop("is_valid", "html", "_src")
+    write_run_idempotent(payload, f"{output_dir}/sinks", run_key, partition_by=["sink_id"])
+    write_run_idempotent(sink_counts(payload), f"{output_dir}/run_counts", run_key)
+
+
 def norm_file_uri(uri: str) -> str:
     """Canonical form for an input-file URI so Hadoop FS listings
     (``file:/p``), Spark's ``input_file_name()`` (``file:///p``,
@@ -211,8 +242,7 @@ def refresh_global_counts(spark: SparkSession, output_dir: str) -> None:
     — and a crash inside the window leaves _counts_old as the recovery
     copy until the next run republishes. The table is always derivable
     from the live run_counts dirs, so any crash here is repaired by the
-    next run. (An Iceberg deployment gets true atomic replace from the
-    catalog commit instead — see the note in run_resumable.)"""
+    next run."""
     fs, jroot = _hadoop_fs(spark, f"{output_dir}/run_counts")
     if not fs.exists(jroot):
         return
@@ -250,20 +280,20 @@ def run_resumable(
     """Process only input files not yet in the manifest; append routed
     rows, refresh counts, checkpoint pool + manifest.
 
-    Returns {"processed": [files], "skipped": [files], "pool_size": n}.
+    Returns {"processed": [files], "skipped": [files], "pool_size": n,
+    "statistics": cumulative parsing statistics}.
     """
     run_t0 = time.monotonic()
     ck = Checkpoint.load(checkpoint_dir)
 
     # a pending_run marker with no completion means the previous attempt
     # died between the sink write and the manifest save — drop its
-    # (possibly partial) run so the retry is idempotent (parquet: delete
-    # the run dirs; an Iceberg deployment: DELETE WHERE run_key)
-    from ..sources.sinks import abort_run, write_run_idempotent
+    # (possibly partial) run dirs so the retry is idempotent
+    from ..sources.sinks import abort_run
 
     if ck.pending_run:
-        abort_run(spark, f"{output_dir}/sinks", ck.pending_run, catalog=None)
-        abort_run(spark, f"{output_dir}/run_counts", ck.pending_run, catalog=None)
+        abort_run(spark, f"{output_dir}/sinks", ck.pending_run)
+        abort_run(spark, f"{output_dir}/run_counts", ck.pending_run)
         ck.pending_run = None
 
     all_files = list_input_files(spark, input_path)
@@ -283,15 +313,7 @@ def run_resumable(
     # file a task that packs several small files reached last
     df = spark.read.parquet(*todo).withColumn("_src", F.input_file_name())
 
-    # discover on the new slice only; merge into the stable pool
-    discovered = discover_templates(df, text_col, cfg)
-    ck.pool = (
-        _merge_into_pool(ck.pool, discovered) if ck.pool else discovered
-    )
-
-    assigned = assign_templates(df, text_col, ck.pool, cfg)
-    parsed = parsed_projection(assigned, ck.pool)
-    routed = route(enrich(parsed), cfg)
+    routed, ck.pool = parse_slice(df, text_col, ck.pool, cfg)
     # three consumers below (lineage agg, sink write, per-run counts) —
     # persist the NEW-SLICE frame so the parse pipeline runs once, not
     # three times (the slice is the incremental delta, not the corpus)
@@ -310,31 +332,17 @@ def run_resumable(
         .collect()
     )
 
-    # idempotent append via sources.sinks.write_run_idempotent: each run
-    # lands under its run=<key> (key = hash of the work set) written with
-    # OVERWRITE, and the key is journaled as pending_run BEFORE the
-    # write. A failure anywhere between write and manifest completion
-    # leaves either nothing or a run that the next attempt aborts (above)
-    # / overwrites — never duplicate sink rows (ADVICE r1:
-    # append-then-save was not retryable). catalog=None pins the
-    # parquet-layout protocol here (manifest bookkeeping is
-    # directory-based); the same adapter implements the Iceberg shape —
-    # run_key column + overwritePartitions (replace-where on run_key) —
-    # for table deployments, where directory deletes can't undo commits.
+    # idempotent append: each run lands under its run=<key> (key = hash
+    # of the work set) written with OVERWRITE, and the key is journaled
+    # as pending_run BEFORE the write. A failure anywhere between write
+    # and manifest completion leaves either nothing or a run that the
+    # next attempt aborts (above) / overwrites — never duplicate sink
+    # rows (ADVICE r1: append-then-save was not retryable).
     run_key = hashlib.md5("\n".join(todo).encode()).hexdigest()[:16]
     ck.pending_run = run_key
     ck.save()
 
-    payload = routed.drop("is_valid", "html", "_src")
-    write_run_idempotent(
-        payload, f"{output_dir}/sinks", run_key, partition_by=["sink_id"], catalog=None
-    )
-    # per-run counts colocated (same lifecycle as the run dir): the
-    # global counts refresh below aggregates THESE — O(runs × templates)
-    # — instead of re-scanning every historical sink row each run
-    write_run_idempotent(
-        sink_counts(payload), f"{output_dir}/run_counts", run_key, catalog=None
-    )
+    write_slice(routed, output_dir, run_key)
     routed.unpersist()
     refresh_global_counts(spark, output_dir)
 

@@ -1,14 +1,16 @@
-"""Table-format sink abstraction: Iceberg when a catalog is configured,
-parquet otherwise.
+"""Sink writers.
 
-The north rule targets per-sink **Iceberg** tables; this container ships no
-Iceberg runtime jars, so the writer negotiates: ``writeTo`` against an
-Iceberg catalog when one is configured on the session
-(``spark.sql.catalog.<name>``), else a Hive-partitioned parquet layout with
-the same logical shape (partition column ``sink_id``, append/overwrite
-semantics). Production deployment only needs
-``--packages org.apache.iceberg:iceberg-spark-runtime-...`` + a catalog
-conf; no code change.
+``write_sink_table`` / ``read_sink_table`` negotiate the table format: the
+north rule targets per-sink **Iceberg** tables, so they go through
+``writeTo`` / ``read.table`` when an Iceberg catalog is configured on the
+session (``spark.sql.catalog.<name>``) and its runtime is on the
+classpath, else a Hive-partitioned parquet layout with the same logical
+shape (partition column ``sink_id``, append/overwrite semantics).
+
+``write_run_idempotent`` / ``abort_run`` are the run-keyed parquet
+protocol of the incremental drivers (``run=<key>`` directories,
+overwrite-on-retry), and ``shard_export`` is the md5-addressed sharded
+export with a read-back manifest.
 """
 
 from __future__ import annotations
@@ -69,84 +71,34 @@ def read_sink_table(spark: SparkSession, target: str, catalog: str = "local") ->
 # idempotent per-run writes (the run_resumable retry protocol)
 # --------------------------------------------------------------------------
 
-RUN_KEY_COL = "run_key"
-
 
 def write_run_idempotent(
     df: DataFrame,
     target: str,
     run_key: str,
     partition_by: list[str] | None = None,
-    catalog: str | None = "local",
-) -> str:
-    """Retry-safe per-run append — the write half of ``run_resumable``'s
-    run-key protocol (plans/checkpoint.py). Returns the format used.
-
-    - **Iceberg** (catalog configured + runtime on classpath): stamp the
-      ``run_key`` column and commit with an EXPLICIT replace-where on
-      ``run_key = <key>`` (``writeTo(...).overwrite(condition)``) — a
-      retry atomically replaces ALL rows of its run_key in one catalog
-      commit, with no directory manipulation. Dynamic
-      ``overwritePartitions()`` would be wrong here: it replaces only
-      the partitions PRESENT in the incoming frame, so a retry whose
-      sink_id set drifted between attempts (pool/config change) would
-      leave the prior attempt's stale (run_key, sink_id) subpartitions
-      committed. The table is created partitioned by
-      (run_key, *partition_by) on first write.
-    - **parquet fallback**: overwrite-write into ``<target>/run=<key>``
-      (the layout ``run_resumable`` has always produced — a crashed
-      attempt's dir is deleted or overwritten by the next attempt).
-    """
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    partition_by = partition_by or []
-    # catalog=None pins the parquet protocol (run_resumable's manifest /
-    # counts bookkeeping is directory-based; a table deployment would
-    # pass its catalog name and table identifiers instead of paths)
-    if catalog is not None and iceberg_catalog(spark, catalog):
-        from pyspark.errors import AnalysisException
-
-        stamped = df.withColumn(RUN_KEY_COL, F.lit(run_key))
-        full = f"{catalog}.{target}"
-        try:
-            stamped.writeTo(full).overwrite(F.col(RUN_KEY_COL) == F.lit(run_key))
-        except AnalysisException as exc:
-            # ONLY a missing table routes to create() — any other failure
-            # (schema mismatch, commit conflict, executor death) must
-            # surface as itself, not be buried under TableAlreadyExists
-            msg = str(exc)
-            if not ("TABLE_OR_VIEW_NOT_FOUND" in msg or "NoSuchTableException" in msg):
-                raise
-            cols = [F.col(RUN_KEY_COL)] + [F.col(c) for c in partition_by]
-            stamped.writeTo(full).partitionedBy(*cols).create()
-        return "iceberg"
+) -> None:
+    """Retry-safe per-run append — the write half of the run-key protocol
+    (``plans/checkpoint.py:write_slice``): overwrite-write into
+    ``<target>/run=<key>``, so a retry of the same key replaces the
+    previous attempt's rows and a new key lands alongside."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(f"{target}/run={run_key}")
-    return "parquet"
 
 
-def abort_run(
-    spark: SparkSession, target: str, run_key: str, catalog: str | None = "local"
-) -> None:
-    """Drop a (possibly partial) run — the cleanup half of the retry
-    protocol. Iceberg: ``DELETE WHERE run_key = <key>`` (a catalog
-    commit); parquet: delete the run directory.
+def abort_run(spark: SparkSession, target: str, run_key: str) -> None:
+    """Drop a (possibly partial) run directory — the cleanup half of the
+    retry protocol.
 
-    ``run_key`` must be a plain token ([A-Za-z0-9_-]): it is interpolated
-    into a DELETE statement and a directory name, and the protocol's keys
-    are md5 hex by construction."""
+    ``run_key`` must be a plain token ([A-Za-z0-9_-]): it becomes a
+    directory name, and the protocol's keys (md5 hex, ``batch-<id>``) are
+    plain by construction."""
     import re
 
     if not re.fullmatch(r"[A-Za-z0-9_-]+", run_key):
         raise ValueError(f"run_key must be a plain token, got {run_key!r}")
-    if catalog is not None and iceberg_catalog(spark, catalog):
-        spark.sql(
-            f"DELETE FROM {catalog}.{target} WHERE {RUN_KEY_COL} = '{run_key}'"
-        )
-        return
     from ..plans.checkpoint import delete_path
 
     delete_path(spark, f"{target}/run={run_key}")

@@ -4,14 +4,16 @@ The reference's "online learning" is sequential stateful insertion
 (reference core/parser.py:127-160); streaming is an unchecked roadmap
 item (README.md:333). Our streaming shape is the standard Spark design:
 
-- ``foreachBatch`` micro-batches run the SAME batch pipeline (discover →
-  merge-into-stable-pool → assign → route), so batch and streaming share
-  one code path and one parity story;
+- each ``foreachBatch`` micro-batch runs the resumable batch run's slice
+  step (``plans.checkpoint.parse_slice`` → ``write_slice``), so a batch
+  and a stream over the same rows yield the same pool, the same sink
+  rows and the same per-run counts (pinned by a parity test);
 - the template pool is the ONLY cross-batch state — it grows via the
   checkpoint semantics (existing ids stable, new patterns appended),
   exactly like the resumable batch runs;
-- per-sink running counts maintained by the sink (append mode) —
-  re-aggregate on read, or use update-mode windowed counts below.
+- each micro-batch overwrites its own ``run=batch-<id>`` dirs under
+  ``sinks`` and ``run_counts``, so a replayed batch id (``foreachBatch``
+  is at-least-once) replaces its rows instead of duplicating them.
 
 ``windowed_template_counts`` additionally shows the watermark/window
 shape for late-data-tolerant per-template time-series counts.
@@ -19,13 +21,12 @@ shape for late-data-tolerant per-template time-series counts.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
-from ..operators.cluster import assign_templates, discover_templates
-from ..plans.checkpoint import _merge_into_pool
-from ..plans.pipeline import route
+from ..plans.checkpoint import Checkpoint, parse_slice, write_slice
 
 
 class StreamingParser:
@@ -47,32 +48,22 @@ class StreamingParser:
         output_dir: str,
         text_col: str = "text",
         cfg: PipelineConfig = DEFAULT_CONFIG,
-        pool: list[dict] | None = None,
         checkpoint_dir: str | None = None,
     ):
-        from ..plans.checkpoint import Checkpoint
-
         self.output_dir = output_dir
         self.text_col = text_col
         self.cfg = cfg
         self.checkpoint = Checkpoint.load(checkpoint_dir) if checkpoint_dir else None
-        if pool is not None:
-            self.pool: list[dict] = pool
-        elif self.checkpoint is not None:
-            self.pool = self.checkpoint.pool
-        else:
-            self.pool = []
+        self.pool: list[dict] = self.checkpoint.pool if self.checkpoint else []
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        discovered = discover_templates(batch_df, self.text_col, self.cfg)
-        self.pool = _merge_into_pool(self.pool, discovered) if self.pool else discovered
-        assigned = assign_templates(batch_df, self.text_col, self.pool, self.cfg)
-        routed = route(assigned, self.cfg).withColumn("_batch_id", F.lit(batch_id))
-        routed.drop("is_valid").write.mode("append").partitionBy("sink_id").parquet(
-            f"{self.output_dir}/sinks"
-        )
+        routed, self.pool = parse_slice(batch_df, self.text_col, self.pool, self.cfg)
+        # two writes (sink rows, run counts) read it — parse once
+        routed.persist(StorageLevel.MEMORY_AND_DISK)
+        write_slice(routed, self.output_dir, f"batch-{batch_id}")
+        routed.unpersist()
         if self.checkpoint is not None:
             self.checkpoint.pool = self.pool
             self.checkpoint.save()

@@ -47,6 +47,7 @@ merging:
 preprocessing:
   remove_timestamps: true
   normalize_numbers: false
+  remove_duplicates: true
 performance:
   max_workers: 4
 """

@@ -71,7 +71,7 @@ def test_write_run_idempotent_parquet_identical_to_direct(spark, tmp_path):
     """The run-key adapter's parquet fallback must produce EXACTLY the
     layout run_resumable has always written: <target>/run=<key> with the
     same partitioning, rows, and overwrite-on-retry semantics (VERDICT r2
-    item 8 — the Iceberg replace-where branch shares this entry point)."""
+    item 8)."""
     import os
 
     from logparser_llm_spark.sources.sinks import abort_run, write_run_idempotent
@@ -83,8 +83,7 @@ def test_write_run_idempotent_parquet_identical_to_direct(spark, tmp_path):
     direct = str(tmp_path / "direct")
     via = str(tmp_path / "via")
     df.write.mode("overwrite").partitionBy("sink_id").parquet(f"{direct}/run=k1")
-    fmt = write_run_idempotent(df, via, "k1", partition_by=["sink_id"])
-    assert fmt == "parquet"  # no Iceberg runtime in this container
+    write_run_idempotent(df, via, "k1", partition_by=["sink_id"])
 
     # identical hive layout...
     assert sorted(os.listdir(f"{direct}/run=k1")) == sorted(os.listdir(f"{via}/run=k1"))
@@ -101,15 +100,15 @@ def test_write_run_idempotent_parquet_identical_to_direct(spark, tmp_path):
     assert spark.read.parquet(via).count() == 35
 
     # abort drops exactly its run
-    abort_run(spark, via, "k2", catalog=None)
+    abort_run(spark, via, "k2")
     assert spark.read.parquet(via).count() == 30
     assert not os.path.exists(f"{via}/run=k2")
 
 
 def test_iceberg_gate_is_honest(spark):
     """No Iceberg runtime in this container: the catalog probe must say
-    so (the adapter's iceberg branch is gated on it), and catalog=None
-    must pin the parquet protocol regardless of session confs."""
+    so (write_sink_table's iceberg branch is gated on it), even when a
+    catalog conf is set."""
     from logparser_llm_spark.sources.sinks import iceberg_catalog
 
     assert iceberg_catalog(spark, "local") is False

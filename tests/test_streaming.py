@@ -2,6 +2,7 @@
 foreachBatch parser, and watermarked windowed counts."""
 
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,12 +39,78 @@ def test_foreach_batch_streaming(spark, tmp_path):
 
     written = spark.read.parquet(f"{out}/sinks")
     assert written.count() == 100
-    assert written.select("_batch_id").distinct().count() >= 2
+    assert written.select("run").distinct().count() >= 2
     assert parser.pool  # pool survived across micro-batches
     ids = [t["template_id"] for t in parser.pool]
     assert ids == [f"tmpl_{i:04d}" for i in range(len(ids))]  # stable ids
     # per-sink counts equal a batch run over the union
     assert written.filter(F.col("template_id") == "unknown").count() == 0
+
+
+def _rows(df, drop=("run",)):
+    """Collected rows as a hashable multiset over every column but
+    ``drop`` (maps become sorted item tuples)."""
+    cols = sorted(c for c in df.columns if c not in drop)
+    out = Counter()
+    for r in df.select(*cols).collect():
+        out[tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)] += 1
+    return out
+
+
+def test_replayed_batch_id_is_written_once(spark, tmp_path):
+    """foreachBatch is at-least-once: a replayed batch id must replace
+    its own rows, not append a second copy."""
+    out = str(tmp_path / "out")
+    df = generate_pages(spark, 50, seed=41)
+    df2 = generate_pages(spark, 30, seed=42)
+    parser = StreamingParser(out)
+    parser.process_batch(df, 7)
+    parser.process_batch(df, 7)  # replay
+    parser.process_batch(df2, 8)
+
+    want = df.count() + df2.count()
+    assert spark.read.parquet(f"{out}/sinks").count() == want
+    counts = spark.read.parquet(f"{out}/run_counts")
+    assert counts.agg(F.sum("doc_count")).first()[0] == want
+    assert {r["run"] for r in counts.select("run").distinct().collect()} == {
+        "batch-7",
+        "batch-8",
+    }
+
+
+def test_micro_batch_equals_resumable_run(spark, tmp_path):
+    """A micro-batch and a resumable run over the same files share one
+    slice step: same pool, same sink rows, same per-run counts."""
+    from logparser_llm_spark.plans.checkpoint import (
+        Checkpoint,
+        list_input_files,
+        run_resumable,
+    )
+
+    src = str(tmp_path / "src")
+    generate_pages(spark, 60, seed=43).coalesce(1).write.parquet(src)
+    generate_pages(spark, 40, seed=44).coalesce(1).write.mode("append").parquet(src)
+    files = list_input_files(spark, src)
+    assert len(files) == 2
+
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    run_resumable(spark, src, ck, out)
+    out2, ck2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
+    parser = StreamingParser(out2, checkpoint_dir=ck2)
+    parser.process_batch(spark.read.parquet(*files), 0)
+
+    def ids(pool):
+        return [(t["template_id"], t["pattern"]) for t in pool]
+
+    assert ids(Checkpoint.load(ck).pool) == ids(Checkpoint.load(ck2).pool) == ids(parser.pool)
+    batch_sinks = spark.read.parquet(f"{out}/sinks")
+    stream_sinks = spark.read.parquet(f"{out2}/sinks")
+    assert sorted(batch_sinks.columns) == sorted(stream_sinks.columns)
+    assert sum(_rows(batch_sinks).values()) == 100
+    assert _rows(batch_sinks) == _rows(stream_sinks)
+    assert _rows(spark.read.parquet(f"{out}/run_counts")) == _rows(
+        spark.read.parquet(f"{out2}/run_counts")
+    )
 
 
 def test_windowed_counts_batch_semantics(spark):
