@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import local_frame
 from .ranking import TOKEN_SPLIT_RE
 
 # re-persist the working word frame every k merges so a long training
@@ -150,11 +151,9 @@ def bpe_train(
 def bpe_merges_df(spark: SparkSession, merges: Sequence[dict]) -> DataFrame:
     """The learned merge table as a DataFrame (broadcast-sized by
     construction: one row per merge)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(m["rank"], m["lhs"], m["rhs"], m["merged"], m["pair_count"]) for m in merges],
-            1,
-        ),
+    return local_frame(
+        spark,
+        [(m["rank"], m["lhs"], m["rhs"], m["merged"], m["pair_count"]) for m in merges],
         "rank int, lhs string, rhs string, merged string, pair_count bigint",
     )
 

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import LOWER_TOKENS_SQL, TOKEN_SPLIT_RE, lower_tokens
+from ..session import local_frame
 
 # one million micro-units per nat, the repo-wide quantum
 _E6 = 1_000_000
@@ -163,12 +164,7 @@ def nb_predict(
     # the class dim is already on the driver — rebuild it as a local
     # frame so the plan's three consumers (wq, base) don't recompute
     # the label scan + n_c aggregate (review finding: 4 redundant jobs)
-    # one slice, not defaultParallelism: the class dim is ≤ MAX_CLASSES
-    # rows, and a core-count-wide local frame makes every stage over it
-    # (broadcast builds included) launch one task per core for nothing
-    classes_local = df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(cls_rows, 1), classes.schema
-    )
+    classes_local = local_frame(df.sparkSession, cls_rows, classes.schema)
     # class dim with prior and the unseen-word baseline, all ln in JVM
     cls = classes_local.select(
         "label",

@@ -35,7 +35,9 @@ Driver merge (pools are O(10²..10³) rows — collect is safe):
 
 Pass 2 (assignment, no shuffle of the fact side):
     **broadcast hash join** of each pattern against a driver-precomputed
-    pattern→template_id map. Tree-walk semantics (first template node on
+    pattern→template_id map, shipped as a JVM local relation
+    (``session.local_frame``) so building the broadcast starts no Python
+    worker. Tree-walk semantics (first template node on
     the ≤max_depth walk, prefix_tree.py:154-186, which collapses patterns
     sharing a ≤max_depth prefix) are preserved by running the tree
     matcher ONCE PER PATTERN on the driver while building the map — so
@@ -56,6 +58,7 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions.cleaning import clean_col, is_valid_log_col
+from ..session import local_frame
 from .drain import UNKNOWN_ID, TemplateTree, extract_template, extract_template_col
 from .merging import dedup_pool_exact, generalize_pool, merge_pool
 
@@ -165,14 +168,10 @@ def assign_patterns(
     invalid lines): a broadcast hash join against the driver-computed
     pattern→tid map; a null or unmapped pattern gets 'unknown'
     (parser.py:388-398)."""
-    spark = df.sparkSession
     # map-side column aliased _map_pattern: a bare 'pattern' would make
     # drop('pattern') also take out an input column of that name
-    # one slice: the map is pool-sized (bounded); a core-count-wide local
-    # frame makes the broadcast build launch one task per core for nothing
-    map_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(list(assignment_map(pool, cfg).items()), 1),
-        schema="_map_pattern string, _tid string",
+    map_df = local_frame(
+        df.sparkSession, assignment_map(pool, cfg).items(), "_map_pattern string, _tid string"
     )
     joined = df.join(F.broadcast(map_df), df[pattern] == map_df["_map_pattern"], "left")
     return joined.withColumn(
@@ -199,17 +198,15 @@ def assign_templates(
 
 
 def pool_to_df(spark: SparkSession, pool: list[dict]) -> DataFrame:
-    """The template pool as a (broadcastable) dimension DataFrame —
-    one slice (pool-sized, bounded by the discovery cap)."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [
-                (t["template_id"], t["pattern"], int(t.get("count", 0)), float(t.get("confidence", 0.9)))
-                for t in pool
-            ],
-            1,
-        ),
-        schema="template_id string, pattern string, discovery_count bigint, confidence double",
+    """The template pool as a (broadcastable) dimension DataFrame
+    (pool-sized, bounded by the discovery cap)."""
+    return local_frame(
+        spark,
+        [
+            (t["template_id"], t["pattern"], int(t.get("count", 0)), float(t.get("confidence", 0.9)))
+            for t in pool
+        ],
+        "template_id string, pattern string, discovery_count bigint, confidence double",
     )
 
 

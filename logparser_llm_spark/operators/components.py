@@ -72,7 +72,9 @@ def _canonical_pairs(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
             F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=False)  # materialized by the gate count
+        # materialized by the gate's take(bound+1): a prefix of partitions
+        # in take's job, the rest in one more job the checkpoint then runs
+        .localCheckpoint(eager=False)
     )
 
 
@@ -135,8 +137,8 @@ def connected_components(
     # gate (≤ bound rows returned ⟺ the whole edge list fits) and, when
     # it fits, already IS the edge list — the previous count()+collect()
     # pair materialized the (possibly expensive) pair mining in one job
-    # and re-read it in a second. Over the bound, take stops early and
-    # the distributed loop proceeds as before.
+    # and re-read it in a second. Over the bound, take still ships
+    # bound+1 rows (~1M by default) to the driver, then drops them.
     head = canon.take(local_max_edges + 1) if local_max_edges >= 0 else []
     if local_max_edges >= 0 and len(head) <= local_max_edges:
         # Kiveris-style local finish: the distinct undirected pair list

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import shingles, ws_tokens
+from ..session import local_frame
 
 
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1016,12 +1017,13 @@ def semantic_dedup(
     # id, so no partitioning could spread one cell's Σ cell² work), so
     # hand the WHOLE cell to numpy as one Arrow batch and do the
     # pairwise cosines as a single GEMM — the shape SemDeDup itself
-    # ships. Distribution granularity, memory bound (O(cell²) per
-    # task), and the verdict rule (dup ⟺ some lower-id cellmate at
-    # round(cos·1e6) ≥ τ_e6, HALF_UP like Spark's round) are identical;
-    # float sums differ only in association order, which cannot flip a
-    # verdict unless a pair's cosine sits within ~1e-6 of the threshold
-    # (the documented contract above).
+    # ships. Distribution granularity and the verdict rule (dup ⟺ some
+    # lower-id cellmate at round(cos·1e6) ≥ τ_e6, HALF_UP like Spark's
+    # round) are identical; float sums differ only in association order,
+    # which cannot flip a verdict unless a pair's cosine sits within
+    # ~1e-6 of the threshold (the documented contract above). Memory is
+    # not: the join streamed pairs, this task holds several cell×cell
+    # float64 matrices (G, denom, cos, ce6: ~80 GB each at 100k rows).
     _id_t = dict(zip(w.columns, (f.dataType.simpleString() for f in w.schema)))[
         id_col
     ]
@@ -1599,11 +1601,7 @@ def simhash_threshold_sweep(
         F.sum(F.when(F.col("same"), 0).otherwise(1)).cast("bigint")
         .alias("fp_h"),
     )
-    spark = df.sparkSession
-    grid = spark.createDataFrame(
-        spark.sparkContext.parallelize([(t,) for t in range(max_hamming + 1)], 1),
-        "t bigint",
-    )
+    grid = local_frame(df.sparkSession, [(t,) for t in range(max_hamming + 1)], "t bigint")
     total_true = (
         fam.where(F.col("_fam").isNotNull())
         .groupBy("_fam")

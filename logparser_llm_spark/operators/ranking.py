@@ -42,6 +42,7 @@ from pyspark.storagelevel import StorageLevel
 # single definition lives in functions/text.py next to its Spark/DuckDB
 # twins (review r5: a third spelling had crept in via dsir.py)
 from ..functions.text import TOKEN_SPLIT_RE  # noqa: F401  (re-export)
+from ..session import local_frame
 
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
@@ -553,14 +554,9 @@ def retrieval_metrics(
         raise ValueError(f"k must be >= 1, got {k}")
     spark = df.sparkSession
     w = ndcg_weights_e6(k)
-    wdim = spark.createDataFrame(
-        spark.sparkContext.parallelize([(r + 1, w[r]) for r in range(k)], 1),
-        "rnk bigint, w bigint",
-    )
+    wdim = local_frame(spark, [(r + 1, w[r]) for r in range(k)], "rnk bigint, w bigint")
     pre = [(m, sum(w[:m])) for m in range(1, k + 1)]
-    idim = spark.createDataFrame(
-        spark.sparkContext.parallelize(pre, 1), "m bigint, idcg bigint"
-    )
+    idim = local_frame(spark, pre, "m bigint, idcg bigint")
     rnk = F.col(rank_col).cast("bigint")
     base = df.select(
         F.col(query_col).alias("q"),

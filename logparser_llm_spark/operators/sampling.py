@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 HASH_BUCKETS = 10_000  # rate resolution 0.01%
 
 # Key types whose string rendering is identical in Spark's cast('string')
@@ -204,10 +206,7 @@ def quota_mix(
         for r in counts
     ]
     key_type = dict(df.dtypes)[key_col]
-    qdf = df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(quotas, 1),
-        schema=f"{key_col} {key_type}, __quota bigint",
-    )
+    qdf = local_frame(df.sparkSession, quotas, f"{key_col} {key_type}, __quota bigint")
     w = Window.partitionBy(key_col).orderBy(
         F.md5(F.col(id_col).cast("string")), F.col(id_col)
     )

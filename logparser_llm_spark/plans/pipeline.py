@@ -9,7 +9,8 @@ Scale design notes (explicit partitioning / shuffle / skew handling):
 
 - **Enrichment joins are broadcast** (J5): lang/domain lookups are tiny
   dims; ``F.broadcast`` pins the plan to BroadcastHashJoin — no shuffle
-  of the fact side, no skew exposure.
+  of the fact side, no skew exposure. Dims are ``session.local_frame``s:
+  their broadcast builds start no Python worker.
 - **Routing is a pure map-side column** (``sink_id = md5-bucket of
   template_id``) + ONE partitioned write (``partitionBy('sink_id')``) —
   a single pass, not K filtered scans of the input.
@@ -32,6 +33,7 @@ from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..functions.hashing import sink_id_col
 from ..operators.cluster import assign_templates, discover_templates, pool_to_df
 from ..operators.drain import UNKNOWN_ID
+from ..session import local_frame
 
 # Small built-in dimension tables for enrichment (J5). Deterministic
 # literals — in production these would be Iceberg dim tables.
@@ -75,17 +77,11 @@ def domain_of(url: Column) -> Column:
 
 
 def lang_dim(spark: SparkSession) -> DataFrame:
-    # one slice: a handful of rows; a core-count-wide local frame makes
-    # every broadcast build over it launch one task per core for nothing
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(LANG_DIM, 1), LANG_DIM_SCHEMA
-    )
+    return local_frame(spark, LANG_DIM, LANG_DIM_SCHEMA)
 
 
 def domain_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(DOMAIN_DIM, 1), DOMAIN_DIM_SCHEMA
-    )
+    return local_frame(spark, DOMAIN_DIM, DOMAIN_DIM_SCHEMA)
 
 
 def enrich(

@@ -57,7 +57,8 @@ from ..operators.dedup import (
     simhash_col,
 )
 from ..operators.similarity import cosine_expr
-from .pipeline import LANG_DIM, enrich, route
+from ..session import local_frame
+from .pipeline import LANG_DIM, enrich, lang_dim, route
 
 NUM_SINKS = 8
 
@@ -86,8 +87,12 @@ def _fan_out(df: DataFrame) -> DataFrame:
     the 10–100 µs/row of downstream compute parallelizes. Width is the
     session's ``defaultParallelism`` (cores locally, executors × cores
     on a cluster) — scale-adaptive, never a constant. Applied only
-    where the downstream per-row work dominates the exchange cost."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    where the downstream per-row work dominates the exchange cost, and
+    only to an input split fewer than ``defaultParallelism`` ways."""
+    width = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= width:
+        return df
+    return df.repartition(width)
 
 
 def e6(col: Column, alias: str) -> Column:
@@ -502,12 +507,8 @@ def q_slotvote_routes_sql(sf: str) -> str:
 def q_enrich_lang_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: broadcast-join enrichment + per-family counts."""
     d = _read(spark, sf_dir, "documents")
-    dim = spark.createDataFrame(
-        spark.sparkContext.parallelize(LANG_DIM, 1),
-        "lang string, lang_name string, lang_family string",
-    )
     return (
-        d.join(F.broadcast(dim), "lang", "left")
+        d.join(F.broadcast(lang_dim(spark)), "lang", "left")
         .groupBy("lang_family", "lang_name")
         .agg(F.count(F.lit(1)).alias("docs"), F.sum("n_chars").alias("chars"))
     )
@@ -3676,11 +3677,8 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n"), F.sum("dist").alias("wcss")
     )
-    md5s = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i, centroid_md5(c)) for i, c in enumerate(cents)], 1
-        ),
-        "cluster int, centroid_md5 string",
+    md5s = local_frame(
+        spark, [(i, centroid_md5(c)) for i, c in enumerate(cents)], "cluster int, centroid_md5 string"
     )
     return stats.join(F.broadcast(md5s), "cluster").select(
         F.col("cluster").cast("bigint").alias("cluster"),
@@ -4549,10 +4547,7 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     cms = cms_build(toks, "term", depth=CMS_QUERY_DEPTH, width=CMS_QUERY_WIDTH)
-    probes = spark.createDataFrame(
-        spark.sparkContext.parallelize([(t,) for t in CMS_PROBE_TERMS], 1),
-        "term string",
-    )
+    probes = local_frame(spark, [(t,) for t in CMS_PROBE_TERMS], "term string")
     est = cms_estimate(
         cms, probes, "term", depth=CMS_QUERY_DEPTH, width=CMS_QUERY_WIDTH
     )
@@ -5454,10 +5449,7 @@ def q_file_skip_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     blooms = bloom_build(
         d, "v", m_bits=FSI_M_BITS, k=FSI_K, group_cols=("file_id",)
     )
-    probes = spark.createDataFrame(
-        spark.sparkContext.parallelize([(f"doc-{i}",) for i in FSI_PROBE_IDS], 1),
-        "v string",
-    )
+    probes = local_frame(spark, [(f"doc-{i}",) for i in FSI_PROBE_IDS], "v string")
     grid = probes.crossJoin(
         F.broadcast(spark.range(FSI_FILES).select(F.col("id").alias("file_id")))
     )
@@ -6266,10 +6258,7 @@ def q_blocklist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.blocklist import blocklist_join
 
     d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    bl = spark.createDataFrame(
-        spark.sparkContext.parallelize([(t,) for t in _BLOCKLIST_TERMS], 1),
-        "term string",
-    )
+    bl = local_frame(spark, [(t,) for t in _BLOCKLIST_TERMS], "term string")
     out = blocklist_join(d, "doc_id", "text", bl)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),

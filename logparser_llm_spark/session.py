@@ -4,14 +4,19 @@ Everything here is the 100 TB posture applied at any scale: AQE on
 (runtime coalescing + skew-join splitting), Arrow batching for the
 pandas-UDF stages, sensible shuffle parallelism. ``cores`` is the
 local-mode stand-in for executor count (the driver benches local[8] vs
-local[32] as the N vs 4N evidence).
+local[32] as the N vs 4N evidence). :func:`local_frame` is how a
+driver-built table enters a plan.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def build_session(
@@ -48,3 +53,17 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType) -> DataFrame:
+    """Driver-built rows (a dimension, a probe list, a pool map) as a
+    one-slice JVM ``LocalTableScan`` typed exactly by ``schema`` (DDL or
+    ``StructType``), empty or not, with or without Arrow conversion: the
+    rows go in as a ``pyarrow.Table`` of the schema's Arrow types. A
+    ``parallelize``d frame is a ``PythonRDD`` whose every job (each
+    broadcast build included) starts a Python worker, and a pandas input
+    falls back to it when empty or when Arrow is off."""
+    arrow = to_arrow_schema(StructType.fromDDL(schema) if isinstance(schema, str) else schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays([pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table).coalesce(1)  # not min(rows, cores) slices

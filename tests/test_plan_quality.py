@@ -34,6 +34,9 @@ def test_assignment_is_jvm_only_broadcast_join(spark, pages):
     # python source, so check only the stages above the scan)
     plan_above_scan = physical_plan(assigned).split("Scan")[0]
     assert "EvalPython" not in plan_above_scan
+    # ... and none in the broadcast build either: the map is a JVM local
+    # relation, not a Python RDD that starts a worker per build
+    _assert_broadcasts_are_local(_executed_nodes(assigned))
 
 
 def _plan_nodes(node):
@@ -47,6 +50,25 @@ def _plan_nodes(node):
         return [node] + _plan_nodes(node.plan())
     children = node.children()
     return [node] + [n for i in range(children.size()) for n in _plan_nodes(children.apply(i))]
+
+
+def _executed_nodes(df):
+    return _plan_nodes(df._jdf.queryExecution().executedPlan())
+
+
+def _names(nodes):
+    return [n.getClass().getSimpleName() for n in nodes]
+
+
+def _assert_broadcasts_are_local(nodes):
+    """Every broadcast build reads a driver-built LocalTableScan and no
+    RDD scan (a ``parallelize``d frame is a PythonRDD: each build of it
+    is a one-task job that starts a Python worker)."""
+    builds = [n for n in nodes if n.getClass().getSimpleName() == "BroadcastExchangeExec"]
+    assert builds, _names(nodes)
+    for b in builds:
+        below = _names(_plan_nodes(b))
+        assert "LocalTableScanExec" in below and "RDDScanExec" not in below, below
 
 
 def test_flagship_counts_read_only_the_pattern_aggregate(spark, tmp_path):
@@ -70,9 +92,9 @@ def test_flagship_counts_read_only_the_pattern_aggregate(spark, tmp_path):
     rows = out.collect()
     assert sum(r["doc_count"] for r in rows) == lines.count()
 
-    nodes = _plan_nodes(out._jdf.queryExecution().executedPlan())
-    names = [n.getClass().getSimpleName() for n in nodes]
-    assert not [n for n in names if "Scan" in n and n not in ("InMemoryTableScanExec", "RDDScanExec")], names
+    nodes = _executed_nodes(out)
+    names = _names(nodes)
+    assert not [n for n in names if "Scan" in n and n not in ("InMemoryTableScanExec", "LocalTableScanExec")], names
     cached = [n for n in nodes if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
     assert len(cached) == 1, names
     held = cached[0].relation().cacheBuilder()
@@ -82,7 +104,39 @@ def test_flagship_counts_read_only_the_pattern_aggregate(spark, tmp_path):
     joins = [n for n in nodes if n.getClass().getSimpleName() == "BroadcastHashJoinExec"]
     assert len(joins) == 1, names
     streamed = joins[0].left() if joins[0].buildSide().toString() == "BuildRight" else joins[0].right()
-    assert "InMemoryTableScanExec" in [n.getClass().getSimpleName() for n in _plan_nodes(streamed)]
+    assert "InMemoryTableScanExec" in _names(_plan_nodes(streamed))
+    _assert_broadcasts_are_local(nodes)
+
+
+def test_per_row_parse_broadcasts_are_local(spark, pages):
+    """The per-row chain's four broadcast builds — the assignment map,
+    the pool dim of the projection and the two enrichment dims — are
+    all JVM local relations."""
+    from logparser_llm_spark.plans.pipeline import parsed_projection
+
+    pool = discover_templates(pages, "text")
+    out = enrich(parsed_projection(assign_templates(pages, "text", pool), pool))
+    out.collect()
+    nodes = _executed_nodes(out)
+    assert _names(nodes).count("BroadcastExchangeExec") == 4, _names(nodes)
+    _assert_broadcasts_are_local(nodes)
+
+
+def test_fan_out_spreads_only_narrow_inputs(spark, tmp_path):
+    """``_fan_out`` round-robins a single-split scan to defaultParallelism
+    and leaves an input already split at least that wide as it is."""
+    from logparser_llm_spark.plans.queries import _fan_out
+
+    width = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "wide")
+    spark.range(4000).repartition(width).write.parquet(src)
+    wide = spark.read.parquet(src)
+    assert wide.rdd.getNumPartitions() >= width
+    assert "RoundRobinPartitioning" not in physical_plan(_fan_out(wide))
+
+    narrow = spark.read.parquet(f"{SF}/documents.parquet")
+    assert narrow.rdd.getNumPartitions() == 1
+    assert f"RoundRobinPartitioning({width})" in physical_plan(_fan_out(narrow))
 
 
 def test_enrich_joins_are_broadcast(spark):
