@@ -7,12 +7,13 @@ distributed shape here is the classic two-pass Drain-at-scale design:
 Pass 1 (discovery, one shuffle):
     clean (JVM ``regexp_replace`` chain) → validity filter →
     deterministic template extraction per row (the LLM replacement) →
-    ``groupBy(pattern)`` (:func:`pattern_counts`).
+    ``rollup(pattern)`` (:func:`pattern_counts`, a group per pattern plus
+    one total row) → one ordered collect of ≤ cap + 2 rows.
 
     Discovery is PURELY FUNCTIONAL per row — ``extract_template`` depends
     only on the row's own cleaned text — so the discovered pool is
     byte-identical at any parallelism (local[8] ≡ local[32] ≡ a
-    1000-executor cluster) and under any row order. The groupBy is the
+    1000-executor cluster) and under any row order. The rollup is the
     only shuffle and carries just (pattern, partial count) pairs after
     map-side combine, so boilerplate skew (one template owning 40% of a
     web corpus) is absorbed by partial aggregation, not a hot reducer.
@@ -46,12 +47,16 @@ Pass 2 (assignment, no shuffle of the fact side):
     patterns in incremental runs) route to 'unknown' (parser.py:388-398).
     This is the "cached template-match fast path" that replaces the
     reference's per-row LLM call. Per-row output (:func:`assign_templates`)
-    joins every row; a counts-only caller joins the discovery aggregate
-    itself (:func:`assign_patterns` over :func:`pattern_counts`), so the
-    work is once per pattern, not once per line.
+    joins every row. A counts-only caller needs no pass 2 at all: the
+    discovery collect already holds each kept pattern's count and the
+    line total (:class:`Discovery`), so the map is applied to those rows
+    on the driver (``plans.queries.parse_route_agg_frame``) — the work is
+    once per pattern, not once per line.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,16 +85,30 @@ def pattern_col():
 
 
 def pattern_counts(cleaned_df: DataFrame) -> DataFrame:
-    """The discovery aggregate of a cleaned frame: one row per pattern
-    ``(pattern, count, example)``, where ``example`` is the min cleaned
-    line (example_logs parity, template_pool.py:102-105), plus one
-    null-pattern row carrying the invalid lines. Everything a counts-only
-    caller needs follows from it — discovery reads the non-null rows and
-    :func:`assign_patterns` labels each row once."""
+    """The discovery aggregate of a cleaned frame, a ``rollup(pattern)``:
+    one row per pattern ``(pattern, count, example, is_total=0)``, where
+    ``example`` is the min cleaned line (example_logs parity,
+    template_pool.py:102-105), one null-pattern row carrying the invalid
+    lines, and one grand-total row (``is_total=1``, null pattern) counting
+    every line — absent when the input has no rows. Everything a
+    counts-only caller needs follows from it: discovery collects the
+    total, the invalid count and the top patterns in one job."""
     pattern = F.when(F.col("is_valid"), extract_template_col(F.col("cleaned")))
-    return cleaned_df.groupBy(pattern.alias("pattern")).agg(
-        F.count(F.lit(1)).alias("count"), F.min("cleaned").alias("example")
+    return cleaned_df.rollup(pattern.alias("pattern")).agg(
+        F.count(F.lit(1)).alias("count"),
+        F.min("cleaned").alias("example"),
+        F.grouping_id().alias("is_total"),
     )
+
+
+class Discovery(NamedTuple):
+    """One discovery collect: the pool, the collected ``pattern → count``
+    rows (the ``None`` key holds the invalid lines; at most the top-cap
+    patterns) and the count of every line seen."""
+
+    pool: list[dict]
+    counts: dict[str | None, int]
+    total: int
 
 
 def discover_templates(
@@ -103,7 +122,8 @@ def discover_templates(
 
     Deterministic at any parallelism: no per-partition state.
     """
-    return discover_templates_from_cleaned(pattern_counts(cleaned_frame(df, text_col, cfg)), cfg)
+    counts = pattern_counts(cleaned_frame(df, text_col, cfg))
+    return discover_templates_from_cleaned(counts, cfg).pool
 
 
 def canonicalize_pool(templates: list[dict]) -> list[dict]:
@@ -245,8 +265,9 @@ def parse_and_count(
     persist_intermediate: bool = False,
 ) -> tuple[DataFrame, list[dict]]:
     """Discover + assign: every row labeled, plus the pool — the per-row
-    path (parsed projection, sink writes). Counts alone follow from the
-    discovery aggregate without labeling a row
+    path (parsed projection, sink writes). Per-template counts alone need
+    neither pass 2 nor a Spark job after discovery: they follow on the
+    driver from the rows the discovery collect returns
     (``plans.queries.parse_route_agg_frame``).
 
     The two passes each evaluate clean+extract over the input. By default
@@ -257,7 +278,7 @@ def parse_and_count(
     caller must unpersist via the returned frame."""
     if persist_intermediate:
         cleaned = cleaned_frame(df, text_col, cfg).persist()
-        pool = discover_templates_from_cleaned(pattern_counts(cleaned), cfg)
+        pool = discover_templates_from_cleaned(pattern_counts(cleaned), cfg).pool
         return assign_templates(cleaned, text_col, pool, cfg, pre_cleaned=True), pool
     pool = discover_templates(df, text_col, cfg)
     return assign_templates(df, text_col, pool, cfg), pool
@@ -265,26 +286,31 @@ def parse_and_count(
 
 def discover_templates_from_cleaned(
     counts: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> list[dict]:
+) -> Discovery:
     """The pool from a cleaned frame's discovery aggregate
     (:func:`pattern_counts`): top-N cap, exact dedup, similarity merge,
-    optional slot vote, canonical ids."""
+    optional slot vote, canonical ids — returned with the collected
+    pattern counts and the line total."""
     merge_cfg = cfg.merging
-    # apply the top-N-by-count pool cap DISTRIBUTED (TakeOrderedAndProject)
-    # so the driver only ever receives ≤ cap rows — a web corpus can have
-    # more distinct patterns than driver memory; same deterministic
-    # (-count, pattern) order the Python-side cap used
+    # one collect, ordered total row → invalid (null) row → the top-N
+    # patterns by (-count, pattern), cut DISTRIBUTED (TakeOrderedAndProject)
+    # so the driver only ever receives ≤ cap + 2 rows — a web corpus can
+    # have more distinct patterns than driver memory
     cap = cfg.scale.broadcast_pool_max_templates
     rows = (
-        counts.filter(F.col("pattern").isNotNull())
-        .orderBy(F.desc("count"), "pattern")
-        .limit(cap)
+        counts.orderBy(
+            F.desc("is_total"), F.col("pattern").isNotNull(), F.desc("count"), "pattern"
+        )
+        .limit(cap + 2)
         .collect()
     )
+    total = rows[0]["count"] if rows else 0  # rollup over no rows has no total row
+    kept = [r for r in rows[1:] if r["pattern"] is not None][:cap]
+    invalid = {None: r["count"] for r in rows[1:2] if r["pattern"] is None}
     templates = [
         {"pattern": r["pattern"], "count": r["count"], "confidence": 0.9,
          "examples": [r["example"]]}
-        for r in rows
+        for r in kept
     ]
     templates = dedup_pool_exact(templates)
     merged = merge_pool(
@@ -295,4 +321,6 @@ def discover_templates_from_cleaned(
     )
     if merge_cfg.enable_slot_voting:
         merged = generalize_pool(merged, merge_cfg.slot_min_distinct)
-    return canonicalize_pool(merged)
+    return Discovery(
+        canonicalize_pool(merged), {**invalid, **{r["pattern"]: r["count"] for r in kept}}, total
+    )

@@ -431,14 +431,15 @@ def hits_integer(
         raise ValueError("iterations must be >= 1")
     if scale < 1:
         raise ValueError("scale must be >= 1")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     # r6 (guide §2.4 "remove shuffles outright"): each iteration joins the
     # edge list on src (auth step) and on dst (hub step). Un-partitioned,
     # BOTH sides of every join shuffle — 2·iterations full edge shuffles.
     # Persisting one src-hashed and one dst-hashed copy establishes each
     # partitioning once; every round's join then only exchanges the tiny
-    # (node, s) score frame. Same rows, bit-exact integer output.
+    # (node, s) score frame. Same rows, bit-exact integer output. These
+    # two are the only edge copies held: the node set and the hub seed
+    # read them too.
     e_src = (
         e.repartition(F.col("src"))
         .sortWithinPartitions("src")
@@ -451,8 +452,8 @@ def hits_integer(
     )
     if nodes is None:
         nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
+            e_src.select(F.col("src").alias("node"))
+            .union(e_dst.select(F.col("dst").alias("node")))
             .distinct()
         )
     else:
@@ -472,7 +473,7 @@ def hits_integer(
     # hub starts at scale for every node that has an outgoing edge —
     # sparse on purpose; isolated/sink nodes hold hub 0 (they endorse
     # nothing), matching the oracle's h0 over distinct srcs.
-    hub = e.select("src").distinct().select(
+    hub = e_src.select("src").distinct().select(
         F.col("src").alias("node"), F.lit(scale).cast("long").alias("s")
     )
     auth = None

@@ -24,6 +24,7 @@ DuckDB oracle, not just a rows-only check.
 from __future__ import annotations
 
 import os
+from collections import Counter
 from dataclasses import replace
 
 import pandas as pd
@@ -38,7 +39,7 @@ from ..functions.cleaning import (
     extract_log_level_col,
     is_valid_log_col,
 )
-from ..functions.hashing import pattern_bucket_col, sink_id_col, sink_id_sql
+from ..functions.hashing import pattern_bucket_col, sink_id, sink_id_col, sink_id_sql
 from ..functions.text import (
     BPE_TOKEN_PATTERN,
     TOKENS_SQL as _TOKENS_SQL,
@@ -56,9 +57,10 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_col,
 )
+from ..operators.drain import UNKNOWN_ID
 from ..operators.similarity import cosine_expr
 from ..session import local_frame
-from .pipeline import LANG_DIM, enrich, lang_dim, route
+from .pipeline import LANG_DIM, enrich, lang_dim
 
 NUM_SINKS = 8
 
@@ -270,26 +272,41 @@ def parse_route_agg_frame(
     lines: DataFrame, text_col: str = "text", cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """The counts-only flagship over ANY line frame: discovery, driver
-    merge, broadcast assignment, md5 fan-out routing, per-sink counts.
-    Shared by the registered flagship queries and bench.py's multi-split
-    flagship so they always measure the identical plan.
+    merge, assignment, md5 fan-out routing, per-sink counts. Shared by the
+    registered flagship queries and bench.py's multi-split flagship so
+    they always measure the identical plan.
 
     Work happens once per pattern, not once per line (the paper's one
     LLM call per template): ONE clean+extract pass aggregates the corpus
-    to ``(pattern-or-null, count, example)`` and only that pattern-grain
-    aggregate is held. Discovery reads it for the pool (same cap, merge,
-    slot vote and canonical ids as every other caller), the assignment
-    map is broadcast-joined to it, and the routed aggregate's counts sum
-    into ``doc_count``. Equal to the per-row path (assign every row,
-    route, count) because every line of a pattern gets its pattern's
-    id — asserted in tests. The held aggregate is pattern-sized and stays
-    cached until the caller unpersists it or clears the cache."""
-    counts = cluster.pattern_counts(cluster.cleaned_frame(lines, text_col, cfg)).persist()
-    pool = cluster.discover_templates_from_cleaned(counts, cfg)
-    return (
-        route(cluster.assign_patterns(counts, pool, cfg), cfg)
-        .groupBy("sink_id", "template_id")
-        .agg(F.sum("count").alias("doc_count"))
+    to the pattern grain plus a total row, and discovery's one collect
+    returns the total, the invalid count and the top-cap patterns with
+    their counts. Each collected pattern counts under its assignment-map
+    id and ``unknown`` takes the rest (invalid lines, the capped tail), so
+    the per-sink counts are summed on the driver and come back as a
+    pool-sized local relation. Equal to the per-row path (assign every
+    row, route, count) because every line of a pattern gets its
+    pattern's id — asserted in tests. The one exception needs the cap
+    hit: a tail pattern the map knows (one the merge created) is
+    labelled by the per-row join, so its count is fetched with one more
+    aggregate job."""
+    agg = cluster.pattern_counts(cluster.cleaned_frame(lines, text_col, cfg))
+    found = cluster.discover_templates_from_cleaned(agg, cfg)
+    amap = cluster.assignment_map(found.pool, cfg)
+    counts = found.counts
+    unseen = sorted(set(amap).difference(counts))
+    if unseen and found.total > sum(counts.values()):
+        tail = agg.filter(F.col("pattern").isin(unseen)).collect()
+        counts = {**counts, **{r["pattern"]: r["count"] for r in tail}}
+    per_tid: Counter = Counter()
+    for pattern, n in counts.items():
+        tid = amap.get(pattern, UNKNOWN_ID)
+        if tid != UNKNOWN_ID:
+            per_tid[tid] += n
+    per_tid[UNKNOWN_ID] = found.total - sum(per_tid.values())
+    return local_frame(
+        lines.sparkSession,
+        sorted((sink_id(t, cfg.scale.num_sinks), t, n) for t, n in per_tid.items() if n),
+        "sink_id bigint, template_id string, doc_count bigint",
     )
 
 

@@ -166,14 +166,20 @@ def test_persist_intermediate_equals_default(spark, log_df):
     assert k1 == k2
 
 
-@pytest.mark.parametrize("variant", ["pool_cap_hit", "slot_voting"])
+@pytest.mark.parametrize(
+    "variant", ["pool_cap_hit", "slot_voting", "merged_tail", "empty", "all_invalid"]
+)
 def test_flagship_counts_equal_per_row_path(spark, log_df, variant):
     """The counts-only flagship (one pass to the pattern grain, the map
-    joined to that aggregate) equals assigning every row, routing and
-    counting — with invalid and null-text lines in the corpus, on the
-    pool-cap branch (the tail routes to 'unknown') and with slot voting."""
+    applied to the collected pattern counts) equals assigning every row,
+    routing and counting — with invalid and null-text lines in the
+    corpus, on the pool-cap branch (the tail routes to 'unknown'), with
+    slot voting, with a capped-tail pattern the vote created (the per-row
+    join labels it, so the counts path must fetch it), on empty input (no
+    total row) and on input with no valid line."""
     from dataclasses import replace
 
+    from logparser_llm_spark.functions.hashing import sink_id
     from logparser_llm_spark.operators.cluster import cleaned_frame, parse_and_count, pattern_counts
     from logparser_llm_spark.plans.pipeline import route
     from logparser_llm_spark.plans.queries import parse_route_agg_frame
@@ -182,32 +188,55 @@ def test_flagship_counts_equal_per_row_path(spark, log_df, variant):
         [("short",), ("!!!???...",), (None,), ("",), ("   ",)] * 2, "text string"
     )
     df = log_df.select("text").unionByName(junk)
+    cfg = TEST_CFG
+    voting = replace(TEST_CFG, merging=replace(TEST_CFG.merging, enable_slot_voting=True))
     if variant == "pool_cap_hit":
         patterns = pattern_counts(cleaned_frame(df, "text")).filter(F.col("pattern").isNotNull())
         cap = patterns.count() // 2
         cfg = PipelineConfig(scale=ScaleConfig(broadcast_pool_max_templates=cap))
+    elif variant == "slot_voting":
+        cfg = voting
+    elif variant == "merged_tail":
+        # the top 4 patterns vote into "worker <*> finished task ok"; the
+        # same pattern, extracted from a numeric slot, is the capped tail
+        words = [f"worker {w} finished task ok" for w in ("alpha", "bravo", "charlie", "delta")]
+        tail = ["worker 42 finished task ok"] * 2
+        df = spark.createDataFrame([(t,) for t in words * 5 + tail], "text string")
+        df = df.unionByName(junk)
+        cfg = replace(voting, scale=replace(voting.scale, broadcast_pool_max_templates=4))
+    elif variant == "empty":
+        df = spark.createDataFrame([], "text string")
     else:
-        cfg = replace(TEST_CFG, merging=replace(TEST_CFG.merging, enable_slot_voting=True))
+        df = junk
 
     assigned, pool = parse_and_count(df, "text", cfg)
     want = {
         (r["sink_id"], r["template_id"]): r["count"]
         for r in route(assigned, cfg).groupBy("sink_id", "template_id").count().collect()
     }
-    got = {
-        (r["sink_id"], r["template_id"]): r["doc_count"]
-        for r in parse_route_agg_frame(df, "text", cfg).collect()
-    }
+    out = parse_route_agg_frame(df, "text", cfg)
+    assert out.schema.simpleString() == "struct<sink_id:bigint,template_id:string,doc_count:bigint>"
+    got = {(r["sink_id"], r["template_id"]): r["doc_count"] for r in out.collect()}
     assert got == want
     assert sum(got.values()) == df.count()
     unknown = sum(v for (_, t), v in got.items() if t == "unknown")
     if variant == "pool_cap_hit":
         assert len(pool) <= cap
         assert unknown > 10  # the 10 invalid lines plus the capped tail
-    else:
+    elif variant == "slot_voting":
         assert unknown == 10
         # the vote merged patterns: the map joins pre-merge source patterns
         assert any(len(t["sources"]) > 1 for t in pool)
+    elif variant == "merged_tail":
+        assert [t["pattern"] for t in pool] == ["worker <*> finished task ok"]
+        assert got == {
+            (sink_id("tmpl_0000", 8), "tmpl_0000"): 22,
+            (sink_id("unknown", 8), "unknown"): 10,
+        }
+    elif variant == "empty":
+        assert got == {}
+    else:
+        assert got == {(sink_id("unknown", 8), "unknown"): 10}
 
 
 def test_pool_to_df_roundtrip(spark, log_df):

@@ -399,6 +399,25 @@ def test_hits_shapes(spark):
     assert all(got[v] == (0, scale) for v in (1, 2, 3, 4))
 
 
+def test_hits_holds_two_edge_copies(spark):
+    """HITS persists one src-partitioned and one dst-partitioned edge copy
+    and nothing else of the edge list; the default node set (every linked
+    node) and the hub seed read those two."""
+    from logparser_llm_spark.operators.graph import hits_integer
+
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    edges, _ = _graph()
+    out = hits_integer(spark.createDataFrame(edges, "src long, dst long"), iterations=2)
+    got = {r["node"]: (r["hub"], r["auth"]) for r in out.collect()}
+    assert got == ref_hits(edges, sorted({v for e in edges for v in e}), 2)
+    added = [i for i in sc.getRDDStorageInfo() if i.id() not in before]
+    # the per-round score frames are local checkpoints, named by their RDD
+    # class; every other held RDD is a cached relation
+    held = [i.name() for i in added if i.name() != "MapPartitionsRDD"]
+    assert len(held) == 2, held
+
+
 def test_hits_contracts(spark):
     from logparser_llm_spark.operators.graph import hits_integer
 

@@ -42,3 +42,34 @@ def test_resumable_run_records_layer_spans(spark, spans, tmp_path):
     names = {s["name"] for s in tracer.spans}
     for name in ("cluster.discover", "merging.dedup", "sinks.write", "checkpoint.save"):
         assert name in names, name
+
+
+def test_flagship_counts_charge_the_aggregate_to_discovery(spark, spans):
+    """The counts-only flagship runs its aggregate inside discovery's
+    collect, so a traced run charges that job to ``cluster.discover`` and
+    still records the driver-side map and merge layers."""
+    from logparser_llm_spark.plans.queries import parse_route_agg_frame
+    from logparser_llm_spark.sources.synth import generate_log_lines
+
+    lines = generate_log_lines(spark, 200, seed=45, partitions=2)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # span ids repeat across tracers: count only the jobs started after this one
+    sc.setJobGroup("before-trace", "job id watermark")
+    spark.range(2).count()
+    mark = max(tracker.getJobIdsForGroup("before-trace"))
+    tracer = spans.Tracer(sc)
+    tracer.install()
+    try:
+        parse_route_agg_frame(lines).collect()
+    finally:
+        tracer.uninstall()
+        sc.setJobGroup(None, None)
+    by_name = {}
+    for s in tracer.spans:
+        by_name.setdefault(s["name"], []).append(s["id"])
+    for name in ("cluster.discover", "drain.assignment_map", "merging.merge"):
+        assert name in by_name, name
+    groups = by_name["cluster.discover"]
+    jobs = [j for g in groups for j in tracker.getJobIdsForGroup(g) if j > mark]
+    assert len(jobs) >= 2, jobs  # the aggregate's map stage and its ordered collect
