@@ -47,11 +47,12 @@ Pass 2 (assignment, no shuffle of the fact side):
     patterns in incremental runs) route to 'unknown' (parser.py:388-398).
     This is the "cached template-match fast path" that replaces the
     reference's per-row LLM call. Per-row output (:func:`assign_templates`)
-    joins every row. A counts-only caller needs no pass 2 at all: the
-    discovery collect already holds each kept pattern's count and the
-    line total (:class:`Discovery`), so the map is applied to those rows
-    on the driver (``plans.queries.parse_route_agg_frame``) — the work is
-    once per pattern, not once per line.
+    joins every row. Counts need no pass 2 at all: the discovery collect
+    already holds each kept pattern's count and the line total
+    (:class:`Discovery`), so the map is applied to those rows on the
+    driver (``plans.pipeline.slice_counts``, which every per-sink count
+    of the package comes from) — the work is once per pattern, not once
+    per line.
 """
 
 from __future__ import annotations
@@ -259,27 +260,17 @@ def pool_to_reference_json(pool: list[dict], saved_at: str = "1970-01-01T00:00:0
 
 
 def parse_and_count(
-    df: DataFrame,
-    text_col: str,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    persist_intermediate: bool = False,
+    df: DataFrame, text_col: str, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> tuple[DataFrame, list[dict]]:
     """Discover + assign: every row labeled, plus the pool — the per-row
     path (parsed projection, sink writes). Per-template counts alone need
     neither pass 2 nor a Spark job after discovery: they follow on the
     driver from the rows the discovery collect returns
-    (``plans.queries.parse_route_agg_frame``).
+    (``plans.pipeline.slice_counts``).
 
-    The two passes each evaluate clean+extract over the input. By default
-    that work is RECOMPUTED — the right trade at 10^12 rows, where
-    materializing a cleaned copy of the corpus costs more than the CPU to
-    re-derive it. ``persist_intermediate=True`` caches the projected
-    (row, cleaned) frame between passes for memory-rich deployments;
-    caller must unpersist via the returned frame."""
-    if persist_intermediate:
-        cleaned = cleaned_frame(df, text_col, cfg).persist()
-        pool = discover_templates_from_cleaned(pattern_counts(cleaned), cfg).pool
-        return assign_templates(cleaned, text_col, pool, cfg, pre_cleaned=True), pool
+    The two passes each evaluate clean+extract over the input: that work
+    is RECOMPUTED — the right trade at 10^12 rows, where materializing a
+    cleaned copy of the corpus costs more than the CPU to re-derive it."""
     pool = discover_templates(df, text_col, cfg)
     return assign_templates(df, text_col, pool, cfg), pool
 

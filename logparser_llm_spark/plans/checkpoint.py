@@ -19,10 +19,12 @@ per-partition lineage + metrics":
   read (Spark never even scans completed ones: the file list is pruned
   before ``spark.read``), their routed rows appended, counts merged;
 - one slice step does the work: ``parse_slice`` (discover → grow the
-  stable pool → assign → project → enrich → route) and ``write_slice``
-  (the run-keyed sink and count writes). ``run_resumable`` runs it per
-  set of new files, ``streaming.incremental.StreamingParser`` per
-  micro-batch.
+  stable pool → assign → project → enrich → route, with the slice's
+  per-sink counts and lineage summed on the driver from the discovery
+  collect) and ``write_slice`` (the run-keyed sink and count writes).
+  ``run_resumable`` runs it per set of new files,
+  ``streaming.incremental.StreamingParser`` per micro-batch and
+  ``pipeline.run_pipeline`` once over its whole input.
 """
 
 from __future__ import annotations
@@ -32,15 +34,17 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from typing import NamedTuple
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
-from ..operators.cluster import discover_templates
+from ..operators import cluster
+from ..operators.cluster import discover_templates  # noqa: F401  -- only for perfbench/spans.py's tracer
 from ..operators.merging import dedup_pool_exact
-from .pipeline import parse_enrich_route, sink_counts
+from .pipeline import enrich, parsed_projection, route, slice_counts
 
 MANIFEST_NAME = "manifest.json"
 POOL_NAME = "pool.json"
@@ -136,20 +140,37 @@ def _merge_into_pool(existing: list[dict], discovered: list[dict]) -> list[dict]
     return out
 
 
+class Slice(NamedTuple):
+    """One parsed slice: its routed rows, the grown pool, its per-sink
+    counts (``sink_id, template_id, doc_count``, a local relation) and
+    its lineage (``rows_total``, ``rows_valid``, ``rows_unknown``)."""
+
+    routed: DataFrame
+    pool: list[dict]
+    counts: DataFrame
+    lineage: dict
+
+
 def parse_slice(
     df: DataFrame, text_col: str, pool: list[dict], cfg: PipelineConfig
-) -> tuple[DataFrame, list[dict]]:
+) -> Slice:
     """The online-learning step for one new slice (a run's files or a
     micro-batch): discover on the slice only, grow the stable pool
     (existing ids kept, new patterns appended), then assign → ParsedLog
-    projection → enrich → route against it. Returns (routed, pool)."""
-    discovered = discover_templates(df, text_col, cfg)
-    pool = _merge_into_pool(pool, discovered) if pool else discovered
-    return parse_enrich_route(df, text_col, cfg, pool)
+    projection → enrich → route against it. The counts and lineage come
+    from the discovery collect (``pipeline.slice_counts``), so no Spark
+    job counts the routed rows."""
+    agg = cluster.pattern_counts(cluster.cleaned_frame(df, text_col, cfg))
+    found = cluster.discover_templates_from_cleaned(agg, cfg)
+    pool = _merge_into_pool(pool, found.pool) if pool else found.pool
+    counts, lineage = slice_counts(agg, found, pool, cfg)
+    assigned = cluster.assign_templates(df, text_col, pool, cfg)
+    routed = route(enrich(parsed_projection(assigned, pool)), cfg)
+    return Slice(routed, pool, counts, lineage)
 
 
-def write_slice(routed: DataFrame, output_dir: str, run_key: str) -> None:
-    """Write a routed slice under ``run=<run_key>``: its sink rows
+def write_slice(s: Slice, output_dir: str, run_key: str) -> None:
+    """Write a parsed slice under ``run=<run_key>``: its sink rows
     (partitioned by ``sink_id``) and its per-template counts. Both writes
     overwrite their run dir, so retrying a key replaces, never duplicates.
     The per-run counts share the run dir's lifecycle; the global counts
@@ -157,9 +178,9 @@ def write_slice(routed: DataFrame, output_dir: str, run_key: str) -> None:
     every historical sink row."""
     from ..sources.sinks import write_run_idempotent
 
-    payload = routed.drop("is_valid", "html", "_src")
+    payload = s.routed.drop("is_valid", "html", "_src")
     write_run_idempotent(payload, f"{output_dir}/sinks", run_key, partition_by=["sink_id"])
-    write_run_idempotent(sink_counts(payload), f"{output_dir}/run_counts", run_key)
+    write_run_idempotent(s.counts, f"{output_dir}/run_counts", run_key)
 
 
 def norm_file_uri(uri: str) -> str:
@@ -313,17 +334,18 @@ def run_resumable(
     # file a task that packs several small files reached last
     df = spark.read.parquet(*todo).withColumn("_src", F.input_file_name())
 
-    routed, ck.pool = parse_slice(df, text_col, ck.pool, cfg)
-    # three consumers below (lineage agg, sink write, per-run counts) —
-    # persist the NEW-SLICE frame so the parse pipeline runs once, not
-    # three times (the slice is the incremental delta, not the corpus)
+    s = parse_slice(df, text_col, ck.pool, cfg)
+    ck.pool = s.pool
+    # two consumers below (per-file lineage agg, sink write) — persist
+    # the NEW-SLICE frame so the parse pipeline runs once, not twice
+    # (the slice is the incremental delta, not the corpus)
     from pyspark import StorageLevel
 
-    routed.persist(StorageLevel.MEMORY_AND_DISK)
+    s.routed.persist(StorageLevel.MEMORY_AND_DISK)
 
     # per-partition (per-file) lineage counters — one distributed agg
     lineage_rows = (
-        routed.groupBy("_src")
+        s.routed.groupBy("_src")
         .agg(
             F.count(F.lit(1)).alias("rows_total"),
             F.sum(F.col("is_valid").cast("long")).alias("rows_valid"),
@@ -342,8 +364,8 @@ def run_resumable(
     ck.pending_run = run_key
     ck.save()
 
-    write_slice(routed, output_dir, run_key)
-    routed.unpersist()
+    write_slice(s, output_dir, run_key)
+    s.routed.unpersist()
     refresh_global_counts(spark, output_dir)
 
     pool_version = len(ck.pool)

@@ -14,24 +14,29 @@ Scale design notes (explicit partitioning / shuffle / skew handling):
 - **Routing is a pure map-side column** (``sink_id = md5-bucket of
   template_id``) + ONE partitioned write (``partitionBy('sink_id')``) —
   a single pass, not K filtered scans of the input.
-- **Per-sink counts are a plain groupBy**: boilerplate templates own a
-  huge share of a web corpus, but Spark's map-side partial aggregation
-  collapses each mapper's rows to one row per (sink, template) before
-  the shuffle, so a hot template costs the final reducer one row per
-  mapper, not one per line.
+- **Per-sink counts come from the discovery collect**
+  (:func:`slice_counts`): discovery already returns each kept pattern's
+  count and the line total, so the counts are summed on the driver
+  under the assignment map, once per pattern, and no caller runs a
+  count job over its routed rows. :func:`sink_counts` (a plain groupBy)
+  remains for ``bench.py``'s per-row reference path.
 - **AQE** (adaptive coalescing + skew-join splitting) is enabled in
   session defaults (session.py) as the runtime backstop.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
-from ..functions.hashing import sink_id_col
-from ..operators.cluster import assign_templates, discover_templates, pool_to_df
+from ..functions.hashing import sink_id, sink_id_col
+from ..operators import cluster
+from ..operators.cluster import Discovery, pool_to_df
+from ..operators.cluster import discover_templates  # noqa: F401  -- only for perfbench/spans.py's tracer
 from ..operators.drain import UNKNOWN_ID
 from ..session import local_frame
 
@@ -199,7 +204,8 @@ def route(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
 
 
 def sink_counts(routed: DataFrame) -> DataFrame:
-    """Per-sink per-template counts (A1 — the parity target)."""
+    """Per-sink per-template counts of routed rows, one groupBy (the
+    per-row reference for :func:`slice_counts`)."""
     return (
         routed.groupBy("sink_id", "template_id")
         .agg(F.count(F.lit(1)).alias("doc_count"))
@@ -207,20 +213,46 @@ def sink_counts(routed: DataFrame) -> DataFrame:
     )
 
 
-def parse_enrich_route(
-    df: DataFrame,
-    text_col: str = "text",
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    pool: list[dict] | None = None,
-) -> tuple[DataFrame, list[dict]]:
-    """parse (discover+assign) → ParsedLog projection → enrich → route.
-    Returns (routed, pool)."""
-    if pool is None:
-        pool = discover_templates(df, text_col, cfg)
-    assigned = assign_templates(df, text_col, pool, cfg)
-    parsed = parsed_projection(assigned, pool)
-    enriched = enrich(parsed)
-    return route(enriched, cfg), pool
+def slice_counts(
+    agg: DataFrame, found: Discovery, pool: list[dict], cfg: PipelineConfig = DEFAULT_CONFIG
+) -> tuple[DataFrame, dict]:
+    """Per-sink counts and lineage of the rows behind a discovery
+    aggregate (``cluster.pattern_counts``), from its collect (``found``).
+
+    Each collected pattern counts under its id in ``pool``'s assignment
+    map and ``unknown`` takes the rest (invalid lines, the capped tail),
+    so the counts are summed on the driver and come back as a pool-sized
+    local relation of ``sink_id, template_id, doc_count``. Equal to
+    routing every row and counting (:func:`sink_counts`) because every
+    line of a pattern gets its pattern's id. The one exception needs the
+    cap hit: a tail pattern the map knows (one the merge created, or one
+    an incremental slice's older pool holds) is labelled by the per-row
+    join, so its count is fetched with one more aggregate job.
+
+    The lineage is ``rows_total``, ``rows_valid`` and ``rows_unknown``."""
+    amap = cluster.assignment_map(pool, cfg)
+    counts = found.counts
+    unseen = sorted(set(amap).difference(counts))
+    if unseen and found.total > sum(counts.values()):
+        tail = agg.filter(F.col("pattern").isin(unseen)).collect()
+        counts = {**counts, **{r["pattern"]: r["count"] for r in tail}}
+    per_tid: Counter = Counter()
+    for pattern, n in counts.items():
+        tid = amap.get(pattern, UNKNOWN_ID)
+        if tid != UNKNOWN_ID:
+            per_tid[tid] += n
+    per_tid[UNKNOWN_ID] = found.total - sum(per_tid.values())
+    frame = local_frame(
+        agg.sparkSession,
+        sorted((sink_id(t, cfg.scale.num_sinks), t, n) for t, n in per_tid.items() if n),
+        "sink_id bigint, template_id string, doc_count bigint",
+    )
+    lineage = {
+        "rows_total": found.total,
+        "rows_valid": found.total - found.counts.get(None, 0),
+        "rows_unknown": per_tid[UNKNOWN_ID],
+    }
+    return frame, lineage
 
 
 def parsing_statistics(
@@ -228,8 +260,8 @@ def parsing_statistics(
 ) -> dict:
     """A3: the reference's derived-rate statistics
     (models/log_entry.py:141-170 ParsingStatistics.to_dict +
-    core/parser.py:418-430 get_statistics), computed from the pipeline's
-    Observation lineage instead of per-row mutation:
+    core/parser.py:418-430 get_statistics), computed from a run's row
+    lineage instead of per-row mutation:
 
     - successfully_parsed = rows assigned a real template (the reference
       increments on non-fallback parse); failed = the 'unknown' rows;
@@ -273,44 +305,28 @@ def run_pipeline(
     text_col: str = "text",
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> dict:
-    """Full job: parse → enrich → route → (optionally) fan-out write →
-    per-sink aggregate counts. Returns a result dict with the counts
-    DataFrame, the pool, lineage metrics observed in-flight, and the
-    reference-shaped derived statistics (A3)."""
+    """Full job over one input: the slice step with an empty pool
+    (``checkpoint.parse_slice``), then optionally the fan-out write of
+    its routed rows to ``{output_dir}/sinks/sink_id=*`` and of the pool
+    to ``{output_dir}/pool``. Returns a result dict with the per-sink
+    counts, the pool, the lineage and the reference-shaped derived
+    statistics (A3)."""
     import time as _time
 
-    from pyspark.sql import Observation
+    from .checkpoint import parse_slice
 
     t0 = _time.perf_counter()
-    routed, pool = parse_enrich_route(df, text_col, cfg)
-
-    obs = Observation("lineage")
-    routed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_total"),
-        F.sum(F.col("is_valid").cast("long")).alias("rows_valid"),
-        F.sum((F.col("template_id") == "unknown").cast("long")).alias("rows_unknown"),
-    )
-
+    s = parse_slice(df, text_col, [], cfg)
     if output_dir is not None:
-        # ONE partitioned single-pass fan-out write (not K filtered scans);
-        # Iceberg when a catalog is configured, parquet otherwise.
-        from ..sources.sinks import read_sink_table, write_sink_table
+        # imported at call time so the benchmark's tracer sees the write
+        from ..sources.sinks import write_sink_table
 
-        payload = routed.drop("is_valid", "html")
-        write_sink_table(payload, f"{output_dir}/sinks", mode="overwrite")
-        pool_to_df(spark, pool).write.mode("overwrite").json(f"{output_dir}/pool")
-        written = read_sink_table(spark, f"{output_dir}/sinks")
-        counts = sink_counts(written)
-    else:
-        counts = sink_counts(routed)
-
-    counts_rows = counts.collect()
-    lineage = dict(obs.get)  # the collect/write above ran the observed plan
+        write_sink_table(s.routed.drop("is_valid", "html"), f"{output_dir}/sinks", mode="overwrite")
+        pool_to_df(spark, s.pool).write.mode("overwrite").json(f"{output_dir}/pool")
     return {
-        "counts": counts_rows,
-        "pool": pool,
-        "lineage": lineage,
-        "statistics": parsing_statistics(lineage, pool, _time.perf_counter() - t0),
+        "counts": s.counts.collect(),
+        "pool": s.pool,
+        "lineage": s.lineage,
+        "statistics": parsing_statistics(s.lineage, s.pool, _time.perf_counter() - t0),
         "num_sinks": cfg.scale.num_sinks,
     }

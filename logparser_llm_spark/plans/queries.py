@@ -24,7 +24,6 @@ DuckDB oracle, not just a rows-only check.
 from __future__ import annotations
 
 import os
-from collections import Counter
 from dataclasses import replace
 
 import pandas as pd
@@ -39,7 +38,7 @@ from ..functions.cleaning import (
     extract_log_level_col,
     is_valid_log_col,
 )
-from ..functions.hashing import pattern_bucket_col, sink_id, sink_id_col, sink_id_sql
+from ..functions.hashing import pattern_bucket_col, sink_id_col, sink_id_sql
 from ..functions.text import (
     BPE_TOKEN_PATTERN,
     TOKENS_SQL as _TOKENS_SQL,
@@ -57,10 +56,9 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_col,
 )
-from ..operators.drain import UNKNOWN_ID
 from ..operators.similarity import cosine_expr
 from ..session import local_frame
-from .pipeline import LANG_DIM, enrich, lang_dim
+from .pipeline import LANG_DIM, enrich, lang_dim, slice_counts
 
 NUM_SINKS = 8
 
@@ -280,34 +278,12 @@ def parse_route_agg_frame(
     LLM call per template): ONE clean+extract pass aggregates the corpus
     to the pattern grain plus a total row, and discovery's one collect
     returns the total, the invalid count and the top-cap patterns with
-    their counts. Each collected pattern counts under its assignment-map
-    id and ``unknown`` takes the rest (invalid lines, the capped tail), so
-    the per-sink counts are summed on the driver and come back as a
-    pool-sized local relation. Equal to the per-row path (assign every
-    row, route, count) because every line of a pattern gets its
-    pattern's id — asserted in tests. The one exception needs the cap
-    hit: a tail pattern the map knows (one the merge created) is
-    labelled by the per-row join, so its count is fetched with one more
-    aggregate job."""
+    their counts, from which ``pipeline.slice_counts`` sums the per-sink
+    counts on the driver. Equal to the per-row path (assign every row,
+    route, count) — asserted in tests."""
     agg = cluster.pattern_counts(cluster.cleaned_frame(lines, text_col, cfg))
     found = cluster.discover_templates_from_cleaned(agg, cfg)
-    amap = cluster.assignment_map(found.pool, cfg)
-    counts = found.counts
-    unseen = sorted(set(amap).difference(counts))
-    if unseen and found.total > sum(counts.values()):
-        tail = agg.filter(F.col("pattern").isin(unseen)).collect()
-        counts = {**counts, **{r["pattern"]: r["count"] for r in tail}}
-    per_tid: Counter = Counter()
-    for pattern, n in counts.items():
-        tid = amap.get(pattern, UNKNOWN_ID)
-        if tid != UNKNOWN_ID:
-            per_tid[tid] += n
-    per_tid[UNKNOWN_ID] = found.total - sum(per_tid.values())
-    return local_frame(
-        lines.sparkSession,
-        sorted((sink_id(t, cfg.scale.num_sinks), t, n) for t, n in per_tid.items() if n),
-        "sink_id bigint, template_id string, doc_count bigint",
-    )
+    return slice_counts(agg, found, found.pool, cfg)[0]
 
 
 def q_parse_route_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2244,7 +2220,9 @@ def q_parsed_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cleaned frame is cached rather than re-derived; the Arrow
     # variable-extraction stage downstream inherits the width
     lines = _fan_out(ev.select("event_id", event_log_line_col().alias("text")))
-    assigned, pool = cluster.parse_and_count(lines, "text", persist_intermediate=True)
+    cleaned = cluster.cleaned_frame(lines, "text").persist()
+    pool = cluster.discover_templates_from_cleaned(cluster.pattern_counts(cleaned)).pool
+    assigned = cluster.assign_templates(cleaned, "text", pool, pre_cleaned=True)
     parsed = parsed_projection(assigned, pool)
     return parsed.select(
         "event_id",

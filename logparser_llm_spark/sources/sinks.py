@@ -1,16 +1,11 @@
 """Sink writers.
 
-``write_sink_table`` / ``read_sink_table`` negotiate the table format: the
-north rule targets per-sink **Iceberg** tables, so they go through
-``writeTo`` / ``read.table`` when an Iceberg catalog is configured on the
-session (``spark.sql.catalog.<name>``) and its runtime is on the
-classpath, else a Hive-partitioned parquet layout with the same logical
-shape (partition column ``sink_id``, append/overwrite semantics).
-
-``write_run_idempotent`` / ``abort_run`` are the run-keyed parquet
-protocol of the incremental drivers (``run=<key>`` directories,
-overwrite-on-retry), and ``shard_export`` is the md5-addressed sharded
-export with a read-back manifest.
+``write_sink_table`` is the one partitioned parquet fan-out write of
+``pipeline.run_pipeline`` (partition column ``sink_id``, one pass, never
+K filtered scans). ``write_run_idempotent`` / ``abort_run`` are the
+run-keyed parquet protocol of the incremental drivers (``run=<key>``
+directories, overwrite-on-retry), and ``shard_export`` is the
+md5-addressed sharded export with a read-back manifest.
 """
 
 from __future__ import annotations
@@ -19,52 +14,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def iceberg_catalog(spark: SparkSession, name: str = "local") -> bool:
-    """True iff an Iceberg catalog with this name is configured AND the
-    Iceberg runtime is on the classpath."""
-    conf = spark.conf
-    try:
-        impl = conf.get(f"spark.sql.catalog.{name}")
-    except Exception:
-        return False
-    if not impl:
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 def write_sink_table(
     df: DataFrame,
     target: str,
     partition_by: list[str] | None = None,
     mode: str = "append",
-    catalog: str = "local",
-) -> str:
-    """Write to ``catalog.db.table`` (Iceberg) or ``<target>`` path
-    (parquet fallback). Returns the format used ('iceberg'|'parquet').
-
-    One partitioned single-pass write either way (never K filtered scans).
-    """
-    spark = df.sparkSession
-    partition_by = partition_by or ["sink_id"]
-    if iceberg_catalog(spark, catalog):
-        writer = df.writeTo(f"{catalog}.{target}")
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return "iceberg"
-    df.write.mode(mode).partitionBy(*partition_by).parquet(target)
-    return "parquet"
-
-
-def read_sink_table(spark: SparkSession, target: str, catalog: str = "local") -> DataFrame:
-    if iceberg_catalog(spark, catalog):
-        return spark.read.table(f"{catalog}.{target}")
-    return spark.read.parquet(target)
+) -> None:
+    """Write ``df`` under ``target`` as Hive-partitioned parquet
+    (``partition_by``, default ``sink_id``): one partitioned single-pass
+    write, never K filtered scans."""
+    df.write.mode(mode).partitionBy(*(partition_by or ["sink_id"])).parquet(target)
 
 
 # --------------------------------------------------------------------------
@@ -133,9 +92,8 @@ def shard_export(
     the plan.
 
     Scale: the write is one hash-partitioned fan-out (the same shape as
-    the per-sink Iceberg fan-out in plans/pipeline.py — pass an
-    Iceberg table identifier via a catalog-aware caller if needed);
-    the manifest is one partially-aggregable scan of the written data.
+    the per-sink fan-out write of ``write_sink_table``); the manifest is
+    one partially-aggregable scan of the written data.
     """
     from ..functions.hashing import md5_slice_col
 

@@ -7,7 +7,9 @@ item (README.md:333). Our streaming shape is the standard Spark design:
 - each ``foreachBatch`` micro-batch runs the resumable batch run's slice
   step (``plans.checkpoint.parse_slice`` → ``write_slice``), so a batch
   and a stream over the same rows yield the same pool, the same sink
-  rows and the same per-run counts (pinned by a parity test);
+  rows and the same per-run counts (pinned by a parity test). The
+  counts come from the slice's discovery collect, so the sink write is
+  the one consumer of the routed rows and nothing is persisted;
 - the template pool is the ONLY cross-batch state — it grows via the
   checkpoint semantics (existing ids stable, new patterns appended),
   exactly like the resumable batch runs;
@@ -21,7 +23,6 @@ shape for late-data-tolerant per-template time-series counts.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,11 +60,9 @@ class StreamingParser:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        routed, self.pool = parse_slice(batch_df, self.text_col, self.pool, self.cfg)
-        # two writes (sink rows, run counts) read it — parse once
-        routed.persist(StorageLevel.MEMORY_AND_DISK)
-        write_slice(routed, self.output_dir, f"batch-{batch_id}")
-        routed.unpersist()
+        s = parse_slice(batch_df, self.text_col, self.pool, self.cfg)
+        self.pool = s.pool
+        write_slice(s, self.output_dir, f"batch-{batch_id}")
         if self.checkpoint is not None:
             self.checkpoint.pool = self.pool
             self.checkpoint.save()

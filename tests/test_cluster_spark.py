@@ -153,19 +153,6 @@ def test_extract_template_col_matches_python(spark):
     assert got == want
 
 
-def test_persist_intermediate_equals_default(spark, log_df):
-    from logparser_llm_spark.operators.cluster import parse_and_count
-
-    a1, p1 = parse_and_count(log_df, "text", TEST_CFG)
-    a2, p2 = parse_and_count(log_df, "text", TEST_CFG, persist_intermediate=True)
-    assert [(t["template_id"], t["pattern"]) for t in p1] == [
-        (t["template_id"], t["pattern"]) for t in p2
-    ]
-    k1 = {(r["url"], r["line_no"]): r["template_id"] for r in a1.collect()}
-    k2 = {(r["url"], r["line_no"]): r["template_id"] for r in a2.collect()}
-    assert k1 == k2
-
-
 @pytest.mark.parametrize(
     "variant", ["pool_cap_hit", "slot_voting", "merged_tail", "empty", "all_invalid"]
 )

@@ -1,8 +1,9 @@
 """The benchmark's tracer wraps package functions by module attribute
 (``perfbench/spans.py``). A refactor that renames, moves or stops calling
 through one of those bindings silently blanks a layer of the traced
-report, so this pins both halves: every traced binding exists, and a
-resumable run fires the spans of the layers it runs."""
+report, so this pins both halves: every traced binding exists, and each
+driver (resumable run, one-shot pipeline, micro-batch, counts-only
+flagship) fires the spans of the layers it runs."""
 
 import os
 import sys
@@ -41,6 +42,41 @@ def test_resumable_run_records_layer_spans(spark, spans, tmp_path):
         tracer.uninstall()
     names = {s["name"] for s in tracer.spans}
     for name in ("cluster.discover", "merging.dedup", "sinks.write", "checkpoint.save"):
+        assert name in names, name
+
+
+def _traced_names(spark, spans, fn) -> set:
+    tracer = spans.Tracer(spark.sparkContext)
+    tracer.install()
+    try:
+        fn()
+    finally:
+        tracer.uninstall()
+        spark.sparkContext.setJobGroup(None, None)
+    return {s["name"] for s in tracer.spans}
+
+
+def test_run_pipeline_records_layer_spans(spark, spans, tmp_path):
+    from logparser_llm_spark.plans import pipeline
+    from logparser_llm_spark.sources.synth import generate_pages
+
+    df = generate_pages(spark, 40, seed=52)
+    # called through the module: the tracer wraps it at that binding
+    names = _traced_names(
+        spark, spans, lambda: pipeline.run_pipeline(spark, df, output_dir=str(tmp_path / "out"))
+    )
+    for name in ("pipeline.run_pipeline", "cluster.discover", "drain.assignment_map", "sinks.write"):
+        assert name in names, name
+
+
+def test_micro_batch_records_layer_spans(spark, spans, tmp_path):
+    from logparser_llm_spark.sources.synth import generate_pages
+    from logparser_llm_spark.streaming.incremental import StreamingParser
+
+    parser = StreamingParser(str(tmp_path / "out"))
+    df = generate_pages(spark, 40, seed=53)
+    names = _traced_names(spark, spans, lambda: parser.process_batch(df, 0))
+    for name in ("cluster.discover", "sinks.write"):
         assert name in names, name
 
 

@@ -2,21 +2,21 @@
 and checkpoint/resume without reprocessing."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from logparser_llm_spark.config import PipelineConfig, ScaleConfig
 from logparser_llm_spark.functions.hashing import sink_id
-from logparser_llm_spark.plans.checkpoint import Checkpoint, run_resumable
+from logparser_llm_spark.plans.checkpoint import Checkpoint, parse_slice, run_resumable
 from logparser_llm_spark.plans.pipeline import (
     domain_of,
     enrich,
-    parse_enrich_route,
     run_pipeline,
     sink_counts,
 )
-from logparser_llm_spark.sources.synth import generate_pages
+from logparser_llm_spark.sources.synth import generate_log_lines, generate_pages
 
 CFG = PipelineConfig(scale=ScaleConfig(num_sinks=4))
 
@@ -47,7 +47,7 @@ def test_enrich_broadcast_join(spark, pages):
 
 
 def test_route_and_counts(spark, pages):
-    routed, pool = parse_enrich_route(pages, "text", CFG)
+    routed = parse_slice(pages, "text", [], CFG).routed
     counts = sink_counts(routed).collect()
     assert sum(r["doc_count"] for r in counts) == pages.count()
     # sink ids are the portable md5 buckets
@@ -67,6 +67,78 @@ def test_run_pipeline_with_fanout_write(spark, pages, tmp_path):
     assert written.count() == pages.count()
     # per-sink counts from the written data match the in-flight ones
     assert sum(r["doc_count"] for r in result["counts"]) == pages.count()
+
+
+def _tuples(rows):
+    return sorted(tuple(r) for r in rows)
+
+
+@pytest.mark.parametrize("variant", ["incremental_capped", "empty", "all_invalid"])
+def test_slice_counts_equal_routed_rows(spark, variant):
+    """A slice's driver-side counts equal counting its routed rows, and
+    its lineage conserves rows. ``incremental_capped`` grows an existing
+    pool from a slice that hits a cap of 3, so the tail patterns only the
+    older pool knows are counted by the extra filtered aggregate."""
+    cfg = CFG
+    pool = []
+    lines = generate_log_lines(spark, 300, seed=61, partitions=3)
+    if variant == "incremental_capped":
+        pool = parse_slice(lines, "text", [], CFG).pool
+        assert len(pool) > 3
+        cfg = PipelineConfig(scale=ScaleConfig(num_sinks=4, broadcast_pool_max_templates=3))
+        lines = generate_log_lines(spark, 200, seed=62, partitions=2)
+    elif variant == "empty":
+        lines = lines.limit(0)
+    else:
+        lines = spark.createDataFrame([("??",)] * 6 + [(None,), ("",)], "text string")
+    s = parse_slice(lines, "text", pool, cfg)
+    got = _tuples(s.counts.collect())
+    assert got == _tuples(sink_counts(s.routed).collect())
+    assert s.counts.schema.simpleString() == "struct<sink_id:bigint,template_id:string,doc_count:bigint>"
+    total = lines.count()
+    assert s.lineage["rows_total"] == sum(n for _, _, n in got) == total
+    assert s.lineage["rows_unknown"] == sum(n for _, t, n in got if t == "unknown")
+    assert s.lineage["rows_valid"] == s.routed.filter("is_valid").count()
+    if variant == "incremental_capped":
+        old = {t["template_id"] for t in pool}
+        assert {t for _, t, _ in got} & old  # the older pool still labels rows
+        assert s.lineage["rows_unknown"] < total
+    elif variant == "empty":
+        assert got == []
+    else:
+        assert got == [(sink_id("unknown", 4), "unknown", 8)]
+        assert s.lineage == {"rows_total": 8, "rows_valid": 0, "rows_unknown": 8}
+
+
+def test_run_pipeline_equals_resumable_run(spark, tmp_path):
+    """The one-shot and the resumable driver share the slice step: on one
+    input they give the same pool, the same sink rows and the same
+    counts."""
+    src = str(tmp_path / "src")
+    generate_pages(spark, 90, seed=63).coalesce(1).write.parquet(src)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    result = run_pipeline(spark, spark.read.parquet(src), output_dir=a, cfg=CFG)
+    run_resumable(spark, src, str(tmp_path / "ck"), b, cfg=CFG)
+
+    def ids(pool):
+        return [(t["template_id"], t["pattern"]) for t in pool]
+
+    assert ids(result["pool"]) == ids(Checkpoint.load(str(tmp_path / "ck")).pool)
+    sa, sb = spark.read.parquet(f"{a}/sinks"), spark.read.parquet(f"{b}/sinks")
+    shared = sorted(set(sa.columns) & set(sb.columns))
+    assert {"template_id", "sink_id", "variables", "text"} <= set(shared)
+
+    def multiset(df):  # maps become sorted item tuples
+        return Counter(
+            tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+            for r in df.select(*shared).collect()
+        )
+
+    rows_a = multiset(sa)
+    assert sum(rows_a.values()) == 90
+    assert rows_a == multiset(sb)
+    counts_b = spark.read.parquet(f"{b}/counts").select("sink_id", "template_id", "doc_count")
+    assert _tuples(result["counts"]) == _tuples(counts_b.collect())
 
 
 def test_resume_skips_completed_files(spark, tmp_path):

@@ -136,6 +136,82 @@ def test_fan_out_spreads_only_narrow_inputs(spark, tmp_path):
     assert f"RoundRobinPartitioning({width})" in physical_plan(_fan_out(narrow))
 
 
+def _jobs_of(spark, group, fn):
+    """(fn(), number of Spark jobs it ran), counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def page_files(spark, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("pages") / "src")
+    generate_pages(spark, 150, seed=47, partitions=3).write.parquet(src)
+    return src
+
+
+def test_run_pipeline_counts_cost_no_more_than_the_flagship(spark, page_files):
+    """The one-shot driver takes its counts from the discovery collect:
+    without an output dir it runs no more jobs than the counts-only
+    flagship over the same input."""
+    from logparser_llm_spark.plans.pipeline import run_pipeline
+    from logparser_llm_spark.plans.queries import parse_route_agg_frame
+
+    df = spark.read.parquet(page_files)
+    flagship, n_flagship = _jobs_of(
+        spark, "flagship-jobs", lambda: parse_route_agg_frame(df).collect()
+    )
+    result, n_pipeline = _jobs_of(spark, "run-pipeline-jobs", lambda: run_pipeline(spark, df))
+    assert n_pipeline <= n_flagship, (n_pipeline, n_flagship)
+    assert sorted(map(tuple, result["counts"])) == sorted(map(tuple, flagship))
+
+
+def test_run_pipeline_write_job_count(spark, page_files, tmp_path):
+    """With an output dir the call runs nine jobs: the discovery
+    aggregate's map stage and its collect, five for the per-row chain's
+    broadcast builds and the sink write, the pool write and the collect
+    of the local counts frame — no read-back scan of the sinks and no
+    count shuffle."""
+    from logparser_llm_spark.plans.pipeline import run_pipeline
+
+    df = spark.read.parquet(page_files)
+    out = str(tmp_path / "out")
+    result, n = _jobs_of(
+        spark, "run-pipeline-write-jobs", lambda: run_pipeline(spark, df, output_dir=out)
+    )
+    assert n == 9, n
+    assert sum(r["doc_count"] for r in result["counts"]) == 150
+
+
+def test_micro_batch_persists_nothing(spark, monkeypatch, tmp_path):
+    """A micro-batch's routed rows have one consumer (the sink write), so
+    nothing is cached while or after its writes run."""
+    from logparser_llm_spark.sources import sinks
+    from logparser_llm_spark.streaming.incremental import StreamingParser
+
+    sc = spark.sparkContext
+
+    def cached():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    seen = []
+    write = sinks.write_run_idempotent
+
+    def recording_write(*args, **kwargs):
+        write(*args, **kwargs)
+        seen.append(cached())
+
+    before = cached()
+    monkeypatch.setattr(sinks, "write_run_idempotent", recording_write)
+    StreamingParser(str(tmp_path / "out")).process_batch(generate_pages(spark, 60, seed=48), 0)
+    assert len(seen) == 2  # sink rows, run counts
+    assert seen == [before, before] and cached() == before
+
+
 def test_enrich_joins_are_broadcast(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
         "url", F.lit("https://example.com/x")

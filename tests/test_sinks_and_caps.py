@@ -1,4 +1,4 @@
-"""Sink abstraction fallback, pool-cap behavior, and skewed-corpus
+"""Sink fan-out write, pool-cap behavior, and skewed-corpus
 aggregation."""
 
 import pytest
@@ -10,21 +10,15 @@ from logparser_llm_spark.operators.cluster import (
     discover_templates,
 )
 from logparser_llm_spark.plans.pipeline import sink_counts
-from logparser_llm_spark.sources.sinks import (
-    iceberg_catalog,
-    read_sink_table,
-    write_sink_table,
-)
+from logparser_llm_spark.sources.sinks import write_sink_table
 from logparser_llm_spark.sources.synth import generate_log_lines
 
 
 def test_sink_fallback_to_parquet(spark, tmp_path):
-    assert not iceberg_catalog(spark)  # no runtime jars in this container
     df = spark.range(100).withColumn("sink_id", F.pmod("id", F.lit(4)))
     target = str(tmp_path / "sinks")
-    fmt = write_sink_table(df, target, mode="overwrite")
-    assert fmt == "parquet"
-    back = read_sink_table(spark, target)
+    write_sink_table(df, target, mode="overwrite")
+    back = spark.read.parquet(target)
     assert back.count() == 100
     assert back.select("sink_id").distinct().count() == 4
 
@@ -103,21 +97,6 @@ def test_write_run_idempotent_parquet_identical_to_direct(spark, tmp_path):
     abort_run(spark, via, "k2")
     assert spark.read.parquet(via).count() == 30
     assert not os.path.exists(f"{via}/run=k2")
-
-
-def test_iceberg_gate_is_honest(spark):
-    """No Iceberg runtime in this container: the catalog probe must say
-    so (write_sink_table's iceberg branch is gated on it), even when a
-    catalog conf is set."""
-    from logparser_llm_spark.sources.sinks import iceberg_catalog
-
-    assert iceberg_catalog(spark, "local") is False
-    # even with a catalog conf set, the classpath probe keeps the gate shut
-    spark.conf.set("spark.sql.catalog.probe_cat", "org.apache.iceberg.spark.SparkCatalog")
-    try:
-        assert iceberg_catalog(spark, "probe_cat") is False
-    finally:
-        spark.conf.unset("spark.sql.catalog.probe_cat")
 
 
 # --- sharded export ---------------------------------------------------------
