@@ -163,6 +163,52 @@ def extract_variables(log: str, template: str) -> dict[str, str]:
     return {}
 
 
+def extract_variables_col(log, template):
+    """JVM Column version of :func:`extract_variables` →
+    ``map<string,string>``, with the regex built per row from the
+    template column: static parts ``\\Q…\\E``-quoted (a ``\\E`` inside
+    one is closed, emitted as ``\\\\E`` and reopened), joined by
+    ``(.+?)``, prefixed ``(?d)^`` — UNIX_LINES, so ``.`` excludes only
+    ``\\n`` as Python's does, and ``^`` with ``find`` is ``re.match``.
+
+    - Group ``i`` is extracted only for ``i ≤ n``, the template's
+      wildcard count; an index past the group count raises
+      ``REGEX_GROUP_INDEX``.
+    - A match never leaves a ``(.+?)`` group empty and ``regexp_extract``
+      returns ``''`` on no match, so dropping empty values leaves ``{}``
+      exactly when the row does not match; a null log or template also
+      gives ``{}``."""
+    from pyspark.sql import functions as F
+
+    def extract(row):
+        parts = row["parts"]
+        n = F.size(parts) - 1
+        rx = F.concat(
+            F.lit("(?d)^"),
+            F.array_join(
+                F.transform(
+                    parts,
+                    lambda p: F.concat(
+                        F.lit(r"\Q"), F.replace(p, F.lit(r"\E"), F.lit(r"\E\\E\Q")), F.lit(r"\E")
+                    ),
+                ),
+                "(.+?)",
+            ),
+        )
+        idx = F.when(n > 0, F.sequence(F.lit(1), n))
+        # PySpark's regexp_extract takes only a literal pattern
+        vals = F.transform(idx, lambda i: F.call_function("regexp_extract", row["log"], rx, i))
+        keys = F.transform(idx, lambda i: F.concat(F.lit("var_"), i.cast("string")))
+        return F.map_filter(F.map_from_arrays(keys, vals), lambda k, v: v != "")
+
+    # a lambda body re-evaluates every outer expression it names once per
+    # element, so the inputs are bound once per row as a one-element array
+    row = F.struct(log.alias("log"), F.split(template, r"<\*>", -1).alias("parts"))
+    return F.coalesce(
+        F.transform(F.array(row), extract)[0], F.create_map().cast("map<string,string>")
+    )
+
+
 class _Node:
     __slots__ = ("token", "children", "log_ids", "template_id")
 

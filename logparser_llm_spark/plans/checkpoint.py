@@ -329,9 +329,10 @@ def run_resumable(
         }
 
     # tag each row with its file AT THE SCAN: input_file_name() names the
-    # file the scan task is reading when the expression runs, so after
-    # the joins and the batching Arrow variables UDF it names whichever
-    # file a task that packs several small files reached last
+    # file the scan task is reading when the expression runs, so above
+    # an operator that buffers rows (a batching Python stage, a sort) it
+    # names whichever file a task that packs several small files reached
+    # last
     df = spark.read.parquet(*todo).withColumn("_src", F.input_file_name())
 
     s = parse_slice(df, text_col, ck.pool, cfg)

@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,7 +36,7 @@ from ..functions.hashing import sink_id, sink_id_col
 from ..operators import cluster
 from ..operators.cluster import Discovery, pool_to_df
 from ..operators.cluster import discover_templates  # noqa: F401  -- only for perfbench/spans.py's tracer
-from ..operators.drain import UNKNOWN_ID
+from ..operators.drain import UNKNOWN_ID, extract_variables_col
 from ..session import local_frame
 
 # Small built-in dimension tables for enrichment (J5). Deterministic
@@ -108,51 +107,6 @@ def enrich(
     return out
 
 
-def make_variables_udf():
-    """Arrow-batched (cleaned, template_pattern) → map<string,string> of
-    extracted variables, re-stating drain.extract_variables with the
-    reference's exact quirks (parser.py:400-416: escaped template,
-    ``<*>`` → lazy ``(.+?)``, re.match with an UNanchored end). The body
-    is self-contained (cloudpickle ships it by value — executors need no
-    package on PYTHONPATH); equality with the canonical function is a
-    test. Compiled patterns are memoized per template — the pool is
-    small, so each Python worker compiles each template once."""
-    from pyspark.sql.functions import pandas_udf
-
-    # worker-level memo: rides in the closure, so each Python worker
-    # compiles each template once across ALL its Arrow batches (a
-    # per-batch dict would recompile the whole pool every ~10k rows)
-    memo: dict = {}
-
-    @pandas_udf("map<string,string>")
-    def _vars(cleaned: pd.Series, template: pd.Series) -> pd.Series:
-        import re
-
-        def compiled(tmpl: str):
-            p = memo.get(tmpl, False)
-            if p is False:
-                try:
-                    p = re.compile(re.escape(tmpl).replace(re.escape("<*>"), "(.+?)"))
-                except re.error:
-                    p = None
-                memo[tmpl] = p
-            return p
-
-        out = []
-        for log, tmpl in zip(cleaned, template):
-            if log is None or tmpl is None:
-                out.append({})
-                continue
-            p = compiled(tmpl)
-            m = p.match(log) if p is not None else None
-            out.append(
-                {f"var_{i}": v for i, v in enumerate(m.groups(), 1)} if m else {}
-            )
-        return pd.Series(out)
-
-    return _vars
-
-
 def parsed_projection(assigned: DataFrame, pool: list[dict]) -> DataFrame:
     """P1 complete: append the ParsedLog fields the reference's result
     rows carry (parser.py:285-297, log_entry.py:80-125) to an assigned
@@ -166,8 +120,9 @@ def parsed_projection(assigned: DataFrame, pool: list[dict]) -> DataFrame:
     - ``cache_hit`` mirrors the reference's cached-template fast path:
       true iff the row matched the broadcast pool; ``used_llm`` is
       constant False (the LLM is replaced by the deterministic extractor);
-    - ``variables`` is the one Python (Arrow-batched) stage in the
-      pipeline; counts-only callers never build this projection.
+    - ``variables`` is :func:`~..operators.drain.extract_variables_col`
+      of the row's ``template_pattern``, a JVM column, so the projection
+      starts no Python worker; counts-only callers never build it.
     """
     spark = assigned.sparkSession
     pool_dim = pool_to_df(spark, pool).select(
@@ -191,7 +146,7 @@ def parsed_projection(assigned: DataFrame, pool: list[dict]) -> DataFrame:
         .drop("_pool_pattern", "_pool_confidence")
     )
     return out.withColumn(
-        "variables", make_variables_udf()(F.col("cleaned"), F.col("template_pattern"))
+        "variables", extract_variables_col(F.col("cleaned"), F.col("template_pattern"))
     )
 
 

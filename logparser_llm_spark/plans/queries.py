@@ -26,10 +26,8 @@ from __future__ import annotations
 import os
 from dataclasses import replace
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
@@ -56,6 +54,7 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_col,
 )
+from ..operators.drain import extract_template_col, extract_variables_col
 from ..operators.similarity import cosine_expr
 from ..session import local_frame
 from .pipeline import LANG_DIM, enrich, lang_dim, slice_counts
@@ -2138,59 +2137,24 @@ def q_lang_quality_sql(sf: str) -> str:
 def q_variables_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14: variable extraction with the reference's exact quirks
     (parser.py:400-416 — lazy groups, unanchored end: the LAST variable
-    captures a single character). Runs the real ``extract_variables``
-    port in an Arrow batch against each row's own template pattern."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("var_1 string, var_2 string")
-    def _vars(cleaned: pd.Series) -> pd.DataFrame:
-        # self-contained re-statement of drain.extract_template +
-        # drain.extract_variables (cloudpickle ships nested defs by
-        # value, so executors need no package on their PYTHONPATH;
-        # equality with the canonical versions is asserted in tests)
-        import re
-
-        def _extract_template(text: str) -> str:
-            toks = [t for t in text.strip().split(" ") if t]
-            out = []
-            for t in toks:
-                if (
-                    re.search(r"\d", t)
-                    or t in ("<NUM>", "<PATH>")
-                    or re.match(r"^[a-f0-9]{8,}$", t)
-                    or re.match(r".*=\S+$", t)
-                ):
-                    out.append("<*>")
-                else:
-                    out.append(t)
-            return " ".join(out)
-
-        def _extract_vars(log: str, template: str) -> dict:
-            pattern = re.escape(template).replace(re.escape("<*>"), "(.+?)")
-            try:
-                m = re.match(pattern, log)
-                if m:
-                    return {f"var_{i}": v for i, v in enumerate(m.groups(), 1)}
-            except re.error:
-                pass
-            return {}
-
-        out = []
-        for c in cleaned:
-            v = _extract_vars(c, _extract_template(c))
-            out.append((v.get("var_1"), v.get("var_2")))
-        return pd.DataFrame(out, columns=["var_1", "var_2"])
-
-    # r6: fan out the one-split scan — the Arrow extraction batches ran
-    # on a single core (guide §2.5 / §4: parallelism before the Python
-    # boundary; only (event_id, line) crosses the exchange)
+    captures a single character), each row against its own extracted
+    template, as JVM columns (``extract_template_col`` →
+    ``extract_variables_col``)."""
+    # r6: fan out the one-split scan — the per-row clean, template and
+    # regex work is the heavy part; only (event_id, line) crosses the
+    # exchange
     ev = _fan_out(_read(spark, sf_dir, "events").select(
         "event_id", event_log_line_col().alias("__line")
     ))
-    cleaned = clean_col(F.col("__line"), DEFAULT_CONFIG.preprocessing)
-    return ev.select("event_id", _vars(cleaned).alias("v")).select(
-        "event_id", F.col("v.var_1").alias("var_1"), F.col("v.var_2").alias("var_2")
+    # selected on its own so the clean runs once per row, not once per use
+    ev = ev.select("event_id", clean_col(F.col("__line"), DEFAULT_CONFIG.preprocessing).alias("c"))
+    cleaned = F.col("c")
+    return ev.select(
+        "event_id", extract_variables_col(cleaned, extract_template_col(cleaned)).alias("v")
+    ).select(
+        "event_id",
+        F.element_at("v", "var_1").alias("var_1"),
+        F.element_at("v", "var_2").alias("var_2"),
     )
 
 
@@ -2217,8 +2181,8 @@ def q_parsed_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _read(spark, sf_dir, "events")
     # r6: fan out the one-split scan + share the cleaned frame between
     # the discover/assign passes — per-row output needs both passes, so
-    # the cleaned frame is cached rather than re-derived; the Arrow
-    # variable-extraction stage downstream inherits the width
+    # the cleaned frame is cached rather than re-derived; the per-row
+    # variable extraction downstream inherits the width
     lines = _fan_out(ev.select("event_id", event_log_line_col().alias("text")))
     cleaned = cluster.cleaned_frame(lines, "text").persist()
     pool = cluster.discover_templates_from_cleaned(cluster.pattern_counts(cleaned)).pool

@@ -2,10 +2,13 @@
 reference's own __main__ demo cases as fixtures (prefix_tree.py:367-389,
 merger.py:280-337)."""
 
+import pytest
+
 from logparser_llm_spark.operators.drain import (
     TemplateTree,
     extract_template,
     extract_variables,
+    extract_variables_col,
     levenshtein,
     template_to_regex,
     token_similarity,
@@ -118,6 +121,40 @@ def test_extract_variables_reference_quirks():
         "var_1": "john"
     }
     assert extract_variables("no match here", "User <*> logged in") == {}
+
+
+@pytest.mark.parametrize(
+    "log,template,expected",
+    [
+        ("a x\ry c", "a <*> c", {"var_1": "x\ry"}),
+        ("a x\u2028y c", "a <*> c", {"var_1": "x\u2028y"}),
+        ("a x\ny c", "a <*> c", {}),  # '.' stops only at \n
+        ("a\nb 5", "a\nb <*>", {"var_1": "5"}),
+        ("x \U0001F600\U0001F601", "x <*>", {"var_1": "\U0001F600"}),
+        ("a\\Eb 5 c", "a\\Eb <*> c", {"var_1": "5"}),
+        ("a\\Q 5", "a\\Q <*>", {"var_1": "5"}),
+        ("(a)[b]{c}$^|+?.* 1 2", "(a)[b]{c}$^|+?.* <*> <*>", {"var_1": "1", "var_2": "2"}),
+        ("lit <*> here 5", "lit <*> here <*>", {"var_1": "<*>", "var_2": "5"}),
+        ("val 12345", "val <*>", {"var_1": "1"}),
+        ("User john logged in today", "User <*> logged in", {"var_1": "john"}),
+        ("no match here", "User <*> logged in", {}),
+        ("plain words", "plain words", {}),
+        (None, "a <*>", {}),
+        ("a b", None, {}),
+    ],
+)
+def test_extract_variables_col_edge_cases(spark, log, template, expected):
+    """The JVM column agrees with the Python reference on inputs the
+    property corpus does not generate: line terminators, astral
+    characters, regex metacharacters and quote markers in the static
+    text, a literal wildcard in the log, and nulls (which give {})."""
+    from pyspark.sql import functions as F
+
+    if log is not None and template is not None:
+        assert extract_variables(log, template) == expected
+    df = spark.createDataFrame([(log, template)], "l string, t string")
+    (row,) = df.select(extract_variables_col(F.col("l"), F.col("t")).alias("v")).collect()
+    assert row["v"] == expected
 
 
 def test_template_to_regex():

@@ -266,8 +266,8 @@ def test_manifest_keys_match_input_file_name(spark, tmp_path):
 def test_manifest_rows_are_per_file_in_one_run(spark, tmp_path):
     """Files of different sizes read in ONE run: each file's manifest
     counters are its own rows. Eight small files make the scan pack
-    several into one task, where a file name read after the Arrow
-    variables stage names whichever file the scan reached last."""
+    several into one task, where a file name read above an operator
+    that buffers rows names whichever file the scan reached last."""
     from urllib.parse import urlparse
 
     import pyarrow.parquet as pq

@@ -105,10 +105,14 @@ def test_flagship_counts_read_only_the_pattern_aggregate(spark, tmp_path):
     assert "InMemoryTableScanExec" not in names and "BroadcastExchangeExec" not in names
 
 
+_PYTHON_EVAL = ("ArrowEvalPythonExec", "BatchEvalPythonExec")
+
+
 def test_per_row_parse_broadcasts_are_local(spark, pages):
     """The per-row chain's four broadcast builds — the assignment map,
     the pool dim of the projection and the two enrichment dims — are
-    all JVM local relations."""
+    all JVM local relations, and no stage of the chain (variable
+    extraction included) evaluates Python."""
     from logparser_llm_spark.plans.pipeline import parsed_projection
 
     pool = discover_templates(pages, "text")
@@ -117,6 +121,19 @@ def test_per_row_parse_broadcasts_are_local(spark, pages):
     nodes = _executed_nodes(out)
     assert _names(nodes).count("BroadcastExchangeExec") == 4, _names(nodes)
     _assert_broadcasts_are_local(nodes)
+    assert not [n for n in _names(nodes) if n in _PYTHON_EVAL], _names(nodes)
+
+
+@pytest.mark.parametrize("name", ["parsed_projection", "variables_extract"])
+def test_variable_extraction_queries_evaluate_no_python(spark, name):
+    """The registered per-row projection queries extract variables in
+    the JVM: their executed plans hold no Python evaluation stage."""
+    from logparser_llm_spark.plans.queries import QUERIES
+
+    out = QUERIES[name][0](spark, SF)
+    out.collect()
+    names = _names(_executed_nodes(out))
+    assert not [n for n in names if n in _PYTHON_EVAL], names
 
 
 def test_fan_out_spreads_only_narrow_inputs(spark, tmp_path):

@@ -90,12 +90,19 @@ def test_validity_agrees_with_unknown_routing(s):
 
 
 def test_jvm_matches_python_on_hypothesis_corpus(spark):
-    """One Spark job over a hypothesis-generated corpus: JVM clean_col and
-    extract_template_col must equal the Python definitions byte-for-byte."""
+    """One Spark job over a hypothesis-generated corpus: JVM clean_col,
+    extract_template_col and extract_variables_col must equal the Python
+    definitions byte-for-byte. Variables are extracted against three
+    templates per line: its own, the next line's (mostly a non-match)
+    and its own cleaned text (the unknown-row fallback)."""
     import pyspark.sql.functions as F
 
     from logparser_llm_spark.functions.cleaning import clean_col
-    from logparser_llm_spark.operators.drain import extract_template_col
+    from logparser_llm_spark.operators.drain import (
+        extract_template_col,
+        extract_variables,
+        extract_variables_col,
+    )
 
     corpus: list[str] = []
 
@@ -105,15 +112,28 @@ def test_jvm_matches_python_on_hypothesis_corpus(spark):
         corpus.append(s)
 
     collect()
-    df = spark.createDataFrame([(s,) for s in corpus], "t string")
+    pairs = [(s, corpus[(i + 1) % len(corpus)]) for i, s in enumerate(corpus)]
+    df = spark.createDataFrame(pairs, "t string, u string")
+    c = clean_col(F.col("t"))
+    p = extract_template_col(c)
     rows = df.select(
         "t",
-        clean_col(F.col("t")).alias("c"),
-        extract_template_col(clean_col(F.col("t"))).alias("p"),
+        "u",
+        c.alias("c"),
+        p.alias("p"),
+        extract_variables_col(c, p).alias("v_own"),
+        extract_variables_col(c, extract_template_col(clean_col(F.col("u")))).alias("v_next"),
+        extract_variables_col(c, c).alias("v_self"),
     ).collect()
     for r in rows:
-        assert r["c"] == clean_text(r["t"]), repr(r["t"])
-        assert r["p"] == extract_template(clean_text(r["t"])), repr(r["t"])
+        cleaned = clean_text(r["t"])
+        own = extract_template(cleaned)
+        assert r["c"] == cleaned, repr(r["t"])
+        assert r["p"] == own, repr(r["t"])
+        assert r["v_own"] == extract_variables(cleaned, own), repr(r["t"])
+        nxt = extract_template(clean_text(r["u"]))
+        assert r["v_next"] == extract_variables(cleaned, nxt), (r["t"], r["u"])
+        assert r["v_self"] == extract_variables(cleaned, cleaned), repr(r["t"])
 
 
 # ---------------------------------------------------------------------------

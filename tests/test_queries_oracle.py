@@ -31,9 +31,10 @@ def _canon(rows, cols):
 
 
 def test_variables_udf_matches_canonical_functions(spark):
-    """The self-contained UDF body in q_variables_extract re-states
-    drain.extract_template/extract_variables; assert they agree on the
-    actual sf corpus rows (guards against drift)."""
+    """q_variables_extract's JVM columns (extract_template_col →
+    extract_variables_col) agree with the Python references
+    drain.extract_template/extract_variables on the actual sf corpus
+    rows."""
     import duckdb as _duck
 
     from logparser_llm_spark.operators.drain import extract_template, extract_variables
