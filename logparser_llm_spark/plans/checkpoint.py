@@ -17,7 +17,9 @@ per-partition lineage + metrics":
   patterns get fresh ids appended after the existing ones;
 - resume = set-difference(input files, manifest) → only new files are
   read (Spark never even scans completed ones: the file list is pruned
-  before ``spark.read``), their routed rows appended, counts merged;
+  before ``spark.read``), their routed rows appended, and their counts
+  added on the driver to the manifest's cumulative counts (the reference's
+  ``Template.count``), which are published, never read back from output;
 - one slice step does the work: ``parse_slice`` (discover → grow the
   stable pool → assign → project → enrich → route, with the slice's
   per-sink counts and lineage summed on the driver from the discovery
@@ -33,6 +35,7 @@ import hashlib
 import json
 import os
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import NamedTuple
 from urllib.parse import unquote, urlparse
@@ -44,7 +47,8 @@ from ..config import PipelineConfig, DEFAULT_CONFIG
 from ..operators import cluster
 from ..operators.cluster import discover_templates  # noqa: F401  -- only for perfbench/spans.py's tracer
 from ..operators.merging import dedup_pool_exact
-from .pipeline import enrich, parsed_projection, route, slice_counts
+from ..session import local_frame
+from .pipeline import COUNTS_SCHEMA, enrich, parsed_projection, route, slice_counts
 
 MANIFEST_NAME = "manifest.json"
 POOL_NAME = "pool.json"
@@ -68,6 +72,9 @@ class Checkpoint:
     pool: list[dict] = field(default_factory=list)
     completed: dict[str, dict] = field(default_factory=dict)  # file -> lineage
     pending_run: str | None = None  # write-ahead marker for the sink append
+    # sorted [sink_id, template_id, doc_count] over the completed files,
+    # saved in the same manifest replace as `completed`: never out of step
+    counts: list[list] = field(default_factory=list)
     # cumulative A3 statistics across every completed run — the sidecar
     # the reference's save_state persists next to the templates
     # (reference core/parser.py:432-455: statistics.json); reloaded on
@@ -85,6 +92,9 @@ class Checkpoint:
                 m = json.load(f)
             ck.completed = m["completed"]
             ck.pending_run = m.get("pending_run")
+            if ck.completed and "counts" not in m:
+                raise ValueError(f"checkpoint {directory!r} predates stored counts: reprocess its input")
+            ck.counts = m.get("counts", [])
         if os.path.exists(ppath):
             with open(ppath) as f:
                 ck.pool = json.load(f)["templates"]
@@ -101,6 +111,7 @@ class Checkpoint:
                 {
                     "completed": self.completed,
                     "pending_run": self.pending_run,
+                    "counts": self.counts,
                     "saved_at": time.time(),
                 },
                 f,
@@ -142,12 +153,12 @@ def _merge_into_pool(existing: list[dict], discovered: list[dict]) -> list[dict]
 
 class Slice(NamedTuple):
     """One parsed slice: its routed rows, the grown pool, its per-sink
-    counts (``sink_id, template_id, doc_count``, a local relation) and
+    counts (driver rows ``Row(sink_id, template_id, doc_count)``) and
     its lineage (``rows_total``, ``rows_valid``, ``rows_unknown``)."""
 
     routed: DataFrame
     pool: list[dict]
-    counts: DataFrame
+    counts: list
     lineage: dict
 
 
@@ -173,14 +184,15 @@ def write_slice(s: Slice, output_dir: str, run_key: str) -> None:
     """Write a parsed slice under ``run=<run_key>``: its sink rows
     (partitioned by ``sink_id``) and its per-template counts. Both writes
     overwrite their run dir, so retrying a key replaces, never duplicates.
-    The per-run counts share the run dir's lifecycle; the global counts
-    refresh sums THESE — O(runs × templates) — instead of re-scanning
-    every historical sink row."""
+    The per-run counts are that run's output table only: nothing reads
+    them back (``run_resumable`` keeps the cumulative counts in the
+    checkpoint)."""
     from ..sources.sinks import write_run_idempotent
 
     payload = s.routed.drop("is_valid", "html", "_src")
     write_run_idempotent(payload, f"{output_dir}/sinks", run_key, partition_by=["sink_id"])
-    write_run_idempotent(s.counts, f"{output_dir}/run_counts", run_key)
+    counts = local_frame(s.routed.sparkSession, s.counts, COUNTS_SCHEMA)
+    write_run_idempotent(counts, f"{output_dir}/run_counts", run_key)
 
 
 def norm_file_uri(uri: str) -> str:
@@ -252,41 +264,26 @@ def list_input_files(spark: SparkSession, input_path: str) -> list[str]:
     return sorted(out)
 
 
-def refresh_global_counts(spark: SparkSession, output_dir: str) -> None:
-    """Rebuild <output>/counts by summing the per-run count tables —
-    cost grows with runs × templates, never with accumulated sink rows.
+def refresh_global_counts(spark: SparkSession, output_dir: str, counts: list) -> None:
+    """Publish the cumulative counts (``Checkpoint.counts``) as
+    <output>/counts: one write of a driver-built local relation.
 
     Publish protocol: write to a tmp dir, park the previous counts dir
     aside (counts → _counts_old), rename tmp into place, drop the old
     copy. Readers never observe a HALF-WRITTEN dir (renames are atomic
     per path); they can observe a brief ABSENCE between the two renames
     — and a crash inside the window leaves _counts_old as the recovery
-    copy until the next run republishes. The table is always derivable
-    from the live run_counts dirs, so any crash here is repaired by the
-    next run."""
-    fs, jroot = _hadoop_fs(spark, f"{output_dir}/run_counts")
-    if not fs.exists(jroot):
-        return
-    paths = [
-        norm_file_uri(s.getPath().toString())
-        for s in fs.listStatus(jroot)
-        if s.isDirectory() and s.getPath().getName().startswith("run=")
-    ]
-    if not paths:
-        return
-    merged = (
-        spark.read.parquet(*paths)
-        .groupBy("sink_id", "template_id")
-        .agg(F.sum("doc_count").alias("doc_count"))
-    )
+    copy until the next run republishes. A crash after the publish leaves
+    the manifest's counts and ``pending_run`` as they were, so the next
+    run redoes the slice and republishes."""
     tmp = f"{output_dir}/_counts_tmp"
-    counts = f"{output_dir}/counts"
+    published = f"{output_dir}/counts"
     old = f"{output_dir}/_counts_old"
-    merged.write.mode("overwrite").parquet(tmp)
+    local_frame(spark, counts, COUNTS_SCHEMA).write.mode("overwrite").parquet(tmp)
     delete_path(spark, old)  # leftover from a previous crash, if any
-    if path_exists(spark, counts):
-        rename_path(spark, counts, old)
-    rename_path(spark, tmp, counts)
+    if path_exists(spark, published):
+        rename_path(spark, published, old)
+    rename_path(spark, tmp, published)
     delete_path(spark, old)
 
 
@@ -299,7 +296,8 @@ def run_resumable(
     cfg: PipelineConfig = DEFAULT_CONFIG,
 ) -> dict:
     """Process only input files not yet in the manifest; append routed
-    rows, refresh counts, checkpoint pool + manifest.
+    rows, add the slice's counts to the checkpoint's and publish them,
+    checkpoint pool + manifest.
 
     Returns {"processed": [files], "skipped": [files], "pool_size": n,
     "statistics": cumulative parsing statistics}.
@@ -367,7 +365,10 @@ def run_resumable(
 
     write_slice(s, output_dir, run_key)
     s.routed.unpersist()
-    refresh_global_counts(spark, output_dir)
+    total = Counter({(sid, tid): n for sid, tid, n in ck.counts})
+    total.update({(sid, tid): n for sid, tid, n in s.counts})
+    ck.counts = [[sid, tid, n] for (sid, tid), n in sorted(total.items())]
+    refresh_global_counts(spark, output_dir, ck.counts)
 
     pool_version = len(ck.pool)
     for r in lineage_rows:

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT_CONFIG
@@ -49,6 +49,8 @@ LANG_DIM = [
     ("zh", "Chinese", "sinitic"),
 ]
 LANG_DIM_SCHEMA = "lang string, lang_name string, lang_family string"
+COUNTS_SCHEMA = "sink_id bigint, template_id string, doc_count bigint"
+CountRow = Row("sink_id", "template_id", "doc_count")
 
 DOMAIN_DIM = [
     ("example.com", "reference"),
@@ -170,14 +172,14 @@ def sink_counts(routed: DataFrame) -> DataFrame:
 
 def slice_counts(
     agg: DataFrame, found: Discovery, pool: list[dict], cfg: PipelineConfig = DEFAULT_CONFIG
-) -> tuple[DataFrame, dict]:
+) -> tuple[list[Row], dict]:
     """Per-sink counts and lineage of the rows behind a discovery
     aggregate (``cluster.pattern_counts``), from its collect (``found``).
 
     Each collected pattern counts under its id in ``pool``'s assignment
     map and ``unknown`` takes the rest (invalid lines, the capped tail),
-    so the counts are summed on the driver and come back as a pool-sized
-    local relation of ``sink_id, template_id, doc_count``. Equal to
+    so the counts are summed on the driver and come back as a sorted,
+    pool-sized list of ``Row(sink_id, template_id, doc_count)``. Equal to
     routing every row and counting (:func:`sink_counts`) because every
     line of a pattern gets its pattern's id. The one exception needs the
     cap hit: a tail pattern the map knows (one the merge created, or one
@@ -197,17 +199,13 @@ def slice_counts(
         if tid != UNKNOWN_ID:
             per_tid[tid] += n
     per_tid[UNKNOWN_ID] = found.total - sum(per_tid.values())
-    frame = local_frame(
-        agg.sparkSession,
-        sorted((sink_id(t, cfg.scale.num_sinks), t, n) for t, n in per_tid.items() if n),
-        "sink_id bigint, template_id string, doc_count bigint",
-    )
+    rows = sorted(CountRow(sink_id(t, cfg.scale.num_sinks), t, n) for t, n in per_tid.items() if n)
     lineage = {
         "rows_total": found.total,
         "rows_valid": found.total - found.counts.get(None, 0),
         "rows_unknown": per_tid[UNKNOWN_ID],
     }
-    return frame, lineage
+    return rows, lineage
 
 
 def parsing_statistics(
@@ -279,7 +277,7 @@ def run_pipeline(
         write_sink_table(s.routed.drop("is_valid", "html"), f"{output_dir}/sinks", mode="overwrite")
         pool_to_df(spark, s.pool).write.mode("overwrite").json(f"{output_dir}/pool")
     return {
-        "counts": s.counts.collect(),
+        "counts": s.counts,
         "pool": s.pool,
         "lineage": s.lineage,
         "statistics": parsing_statistics(s.lineage, s.pool, _time.perf_counter() - t0),

@@ -57,7 +57,7 @@ from ..operators.dedup import (
 from ..operators.drain import extract_template_col, extract_variables_col
 from ..operators.similarity import cosine_expr
 from ..session import local_frame
-from .pipeline import LANG_DIM, enrich, lang_dim, slice_counts
+from .pipeline import COUNTS_SCHEMA, LANG_DIM, enrich, lang_dim, slice_counts
 
 NUM_SINKS = 8
 
@@ -282,7 +282,7 @@ def parse_route_agg_frame(
     route, count) — asserted in tests."""
     agg = cluster.pattern_counts(cluster.cleaned_frame(lines, text_col, cfg))
     found = cluster.discover_templates_from_cleaned(agg, cfg)
-    return slice_counts(agg, found, found.pool, cfg)[0]
+    return local_frame(lines.sparkSession, slice_counts(agg, found, found.pool, cfg)[0], COUNTS_SCHEMA)
 
 
 def q_parse_route_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,6 +38,7 @@ def test_distance_two_candidates_die_at_verify(spark):
 
 def test_null_excluded_and_overlong_raises(spark):
     from py4j.protocol import Py4JJavaError
+    from pyspark.errors import SparkRuntimeException
 
     from logparser_llm_spark.operators.fuzzy import fuzzy_join_ed1
 
@@ -47,10 +48,12 @@ def test_null_excluded_and_overlong_raises(spark):
     assert got == {(1, 3)}
 
     longrow = spark.createDataFrame([(1, "x" * 300)], "id long, s string")
-    # the woven assert_true surfaces as a JVM-side failure (Spark wraps
-    # the root cause under stage-materialization, so no message match)
-    with pytest.raises(Py4JJavaError):
+    # the woven assert_true surfaces as the raw JVM failure or, depending
+    # on session state, as PySpark's converted SparkRuntimeException
+    # [USER_RAISED_EXCEPTION]; both carry the assert's message
+    with pytest.raises((Py4JJavaError, SparkRuntimeException)) as excinfo:
         fuzzy_join_ed1(longrow, "id", "s").collect()
+    assert "fuzzy_join_ed1: string over" in str(excinfo.value)
 
 
 def test_matches_bruteforce_duckdb_unit_scale(spark):

@@ -11,11 +11,13 @@ from logparser_llm_spark.config import PipelineConfig, ScaleConfig
 from logparser_llm_spark.functions.hashing import sink_id
 from logparser_llm_spark.plans.checkpoint import Checkpoint, parse_slice, run_resumable
 from logparser_llm_spark.plans.pipeline import (
+    COUNTS_SCHEMA,
     domain_of,
     enrich,
     run_pipeline,
     sink_counts,
 )
+from logparser_llm_spark.session import local_frame
 from logparser_llm_spark.sources.synth import generate_log_lines, generate_pages
 
 CFG = PipelineConfig(scale=ScaleConfig(num_sinks=4))
@@ -92,9 +94,10 @@ def test_slice_counts_equal_routed_rows(spark, variant):
     else:
         lines = spark.createDataFrame([("??",)] * 6 + [(None,), ("",)], "text string")
     s = parse_slice(lines, "text", pool, cfg)
-    got = _tuples(s.counts.collect())
+    got = _tuples(s.counts)
     assert got == _tuples(sink_counts(s.routed).collect())
-    assert s.counts.schema.simpleString() == "struct<sink_id:bigint,template_id:string,doc_count:bigint>"
+    frame = local_frame(spark, s.counts, COUNTS_SCHEMA)
+    assert frame.schema.simpleString() == "struct<sink_id:bigint,template_id:string,doc_count:bigint>"
     total = lines.count()
     assert s.lineage["rows_total"] == sum(n for _, _, n in got) == total
     assert s.lineage["rows_unknown"] == sum(n for _, t, n in got if t == "unknown")
@@ -362,8 +365,9 @@ def test_parsed_projection_matches_reference_shapes(spark):
 
 
 def test_parsing_statistics_derived_rates(spark):
-    """A3: reference log_entry.py:141-170 derived rates materialized from
-    the Observation lineage."""
+    """A3: reference log_entry.py:141-170 derived rates computed from the
+    slice's lineage (row counts summed on the driver from the discovery
+    collect)."""
     from logparser_llm_spark.plans.pipeline import run_pipeline
 
     rows = [("alpha beta gamma delta 111",)] * 8 + [("??",)] * 2
@@ -400,8 +404,9 @@ def test_zero_row_input_file_is_marked_complete(spark, tmp_path):
 
 
 def test_incremental_counts_match_full_reaggregation(spark, tmp_path):
-    """Global counts are merged from per-run count tables; they must
-    equal a full re-aggregation of all accumulated sink rows."""
+    """Global counts are the checkpoint's cumulative counts, grown by
+    each run's slice; they must equal a full re-aggregation of all
+    accumulated sink rows."""
     src = str(tmp_path / "src")
     ck = str(tmp_path / "ck")
     out = str(tmp_path / "out")
@@ -423,3 +428,66 @@ def test_incremental_counts_match_full_reaggregation(spark, tmp_path):
     }
     assert counts == full
     assert sum(counts.values()) == 90
+
+
+def test_crash_after_counts_publish_is_repaired(spark, tmp_path, monkeypatch):
+    """A run that dies after publishing ``counts`` but before its final
+    manifest save leaves the checkpoint's counts and ``pending_run`` as
+    they were; the next run redoes the slice, so both the published table
+    and the checkpoint's counts equal a from-scratch sum of the sinks."""
+    from logparser_llm_spark.plans import pipeline
+
+    src = str(tmp_path / "src")
+    ck = str(tmp_path / "ck")
+    out = str(tmp_path / "out")
+    generate_pages(spark, 60, seed=17).coalesce(1).write.parquet(src)
+    run_resumable(spark, src, ck, out)
+    before = Checkpoint.load(ck).counts
+    generate_pages(spark, 30, seed=18).coalesce(1).write.mode("append").parquet(src)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after the counts publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "parsing_statistics", crash)
+        with pytest.raises(RuntimeError, match="crash after the counts publish"):
+            run_resumable(spark, src, ck, out)
+    crashed = Checkpoint.load(ck)
+    assert crashed.pending_run and crashed.counts == before
+    assert sum(r["doc_count"] for r in spark.read.parquet(f"{out}/counts").collect()) == 90
+
+    r = run_resumable(spark, src, ck, out)
+    assert len(r["processed"]) == 1
+    full = _tuples(
+        spark.read.parquet(f"{out}/sinks")
+        .groupBy("sink_id", "template_id")
+        .agg(F.count(F.lit(1)).alias("doc_count"))
+        .collect()
+    )
+    assert sum(n for _, _, n in full) == 90
+    published = spark.read.parquet(f"{out}/counts").select("sink_id", "template_id", "doc_count")
+    assert _tuples(published.collect()) == full
+    assert _tuples(Checkpoint.load(ck).counts) == full
+
+
+def test_manifest_without_counts_raises(tmp_path):
+    """A manifest that lists completed files but no cumulative counts
+    (written before the counts moved into the checkpoint) is refused, not
+    published as partial counts; one with no completed files (a
+    ``StreamingParser`` checkpoint) still loads."""
+    import json
+
+    old = tmp_path / "old"
+    old.mkdir()
+    (old / "manifest.json").write_text(
+        json.dumps({"completed": {"file:///in/a.parquet": {"rows_total": 3}}, "pending_run": None})
+    )
+    with pytest.raises(ValueError, match="predates stored counts") as excinfo:
+        Checkpoint.load(str(old))
+    assert str(old) in str(excinfo.value)
+
+    stream = tmp_path / "stream"
+    stream.mkdir()
+    (stream / "manifest.json").write_text(json.dumps({"completed": {}, "pending_run": None}))
+    ck = Checkpoint.load(str(stream))
+    assert ck.completed == {} and ck.counts == []

@@ -188,11 +188,11 @@ def test_run_pipeline_counts_cost_no_more_than_the_flagship(spark, page_files):
 
 
 def test_run_pipeline_write_job_count(spark, page_files, tmp_path):
-    """With an output dir the call runs nine jobs: the discovery
+    """With an output dir the call runs eight jobs: the discovery
     aggregate's map stage and its collect, five for the per-row chain's
-    broadcast builds and the sink write, the pool write and the collect
-    of the local counts frame — no read-back scan of the sinks and no
-    count shuffle."""
+    broadcast builds and the sink write, and the pool write — no
+    read-back scan of the sinks, no count shuffle and no collect of the
+    counts, which stay driver rows."""
     from logparser_llm_spark.plans.pipeline import run_pipeline
 
     df = spark.read.parquet(page_files)
@@ -200,8 +200,44 @@ def test_run_pipeline_write_job_count(spark, page_files, tmp_path):
     result, n = _jobs_of(
         spark, "run-pipeline-write-jobs", lambda: run_pipeline(spark, df, output_dir=out)
     )
-    assert n == 9, n
+    assert n == 8, n
     assert sum(r["doc_count"] for r in result["counts"]) == 150
+
+
+def test_counts_publish_reads_no_history(spark, tmp_path, monkeypatch):
+    """Each incremental run publishes ``counts`` with one Spark job that
+    writes the checkpoint's cumulative counts: its plan scans no file
+    (no earlier run's counts are read back) and aggregates nothing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from logparser_llm_spark.plans import checkpoint
+
+    publish, parquet = checkpoint.refresh_global_counts, DataFrameWriter.parquet
+    calls = []
+
+    def traced(*args, **kwargs):
+        written = []
+
+        def recording(self, path, *a, **k):
+            written.append(self._df)
+            return parquet(self, path, *a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet", recording)
+            _, n = _jobs_of(spark, f"counts-publish-{len(calls)}", lambda: publish(*args, **kwargs))
+        calls.append((n, written))
+
+    monkeypatch.setattr(checkpoint, "refresh_global_counts", traced)
+    src, ck, out = (str(tmp_path / d) for d in ("src", "ck", "out"))
+    for i in range(3):
+        generate_pages(spark, 30, seed=70 + i).coalesce(1).write.mode("append").parquet(src)
+        assert len(checkpoint.run_resumable(spark, src, ck, out)["processed"]) == 1
+    assert [n for n, _ in calls] == [1, 1, 1]
+    for _, written in calls:
+        assert len(written) == 1
+        names = _names(_executed_nodes(written[0]))
+        assert "LocalTableScanExec" in names, names
+        assert "FileSourceScanExec" not in names and "HashAggregateExec" not in names, names
 
 
 def test_micro_batch_persists_nothing(spark, monkeypatch, tmp_path):
