@@ -21,12 +21,9 @@ from logparser_llm_spark.operators.merging import (
     should_merge,
 )
 
-from .ref_loader import ref_cleaner, ref_config, ref_merger, ref_models
+from .ref_loader import needs_reference, ref_cleaner, ref_config, ref_merger, ref_models
 
-REF_CLEANER = ref_cleaner()
-REF_CONFIG = ref_config()
-REF_MERGER = ref_merger()
-REF_MODELS = ref_models()
+pytestmark = needs_reference
 
 FRAGMENTS = [
     "2024-01-01 10:00:00", "2024-01-01T10:00:00.123Z", "12/31/2024 23:59:59",
@@ -59,6 +56,7 @@ CONFIG_VARIANTS = [
 @pytest.mark.parametrize("overrides", CONFIG_VARIANTS)
 @pytest.mark.parametrize("seed", [5, 99])
 def test_clean_byte_identical_to_reference(overrides, seed):
+    REF_CLEANER, REF_CONFIG = ref_cleaner(), ref_config()
     ref = REF_CLEANER.LogCleaner(REF_CONFIG.PreprocessingConfig(**overrides))
     ours_cfg = PreprocessingConfig(**overrides)
     lines = _random_lines(seed, 400)
@@ -68,6 +66,7 @@ def test_clean_byte_identical_to_reference(overrides, seed):
 
 
 def test_validity_and_extracts_match_reference():
+    REF_CLEANER = ref_cleaner()
     ref = REF_CLEANER.LogCleaner()
     for line in _random_lines(17, 300):
         assert is_valid_log(line) == REF_CLEANER.LogCleaner.is_valid_log(line), line
@@ -88,6 +87,7 @@ def _random_patterns(seed: int, n: int) -> list[str]:
 
 
 def test_merger_semantics_match_reference():
+    REF_MERGER, REF_MODELS = ref_merger(), ref_models()
     merger = REF_MERGER.TemplateMerger()
     Template = REF_MODELS.Template
     pats = _random_patterns(23, 60)

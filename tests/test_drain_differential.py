@@ -7,9 +7,9 @@ import pytest
 
 from logparser_llm_spark.operators.drain import TemplateTree, token_similarity
 
-from .ref_loader import ref_prefix_tree
+from .ref_loader import needs_reference, ref_prefix_tree
 
-REF = ref_prefix_tree()
+pytestmark = needs_reference
 
 
 WORDS = ["user", "failed", "connect", "disk", "error", "warn", "login", "logout",
@@ -29,6 +29,7 @@ def _random_logs(seed: int, n: int) -> list[str]:
 
 @pytest.mark.parametrize("seed", [1, 7, 42])
 def test_insert_search_parity_with_reference(seed):
+    REF = ref_prefix_tree()
     ours = TemplateTree(max_depth=5, min_cluster_size=3)
     ref = REF.PrefixTree(max_depth=5, min_cluster_size=3)
     logs = _random_logs(seed, 300)
@@ -48,6 +49,7 @@ def test_insert_search_parity_with_reference(seed):
 
 @pytest.mark.parametrize("seed", [3, 11])
 def test_token_similarity_parity_with_reference(seed):
+    REF = ref_prefix_tree()
     rng = random.Random(seed)
     tokens = WORDS + VARS + ["deadbeef" * 4, "cafebabe" * 4, "x" * 64, ""]
     for _ in range(500):

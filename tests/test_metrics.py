@@ -15,9 +15,7 @@ from logparser_llm_spark.metrics import (
     template_accuracy,
 )
 
-from .ref_loader import ref_metrics
-
-REF = ref_metrics().ParsingMetrics
+from .ref_loader import needs_reference, ref_metrics
 
 
 def _random_labels(seed: int, n: int, k: int) -> list[str]:
@@ -25,8 +23,10 @@ def _random_labels(seed: int, n: int, k: int) -> list[str]:
     return [f"c{rng.randint(0, k)}" for _ in range(n)]
 
 
+@needs_reference
 @pytest.mark.parametrize("seed", [1, 5, 9])
 def test_formula_parity_with_reference(seed):
+    REF = ref_metrics().ParsingMetrics
     pred = _random_labels(seed, 200, 8)
     truth = _random_labels(seed + 1, 200, 6)
     assert grouping_accuracy(pred, truth) == REF.grouping_accuracy(pred, truth)

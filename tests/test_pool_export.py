@@ -9,9 +9,10 @@ from logparser_llm_spark.operators.cluster import (
 )
 from logparser_llm_spark.sources.synth import generate_log_lines
 
-from .ref_loader import _ref_package_module, ref_models
+from .ref_loader import needs_reference, ref_template_pool
 
 
+@needs_reference
 def test_reference_pool_roundtrip(spark, tmp_path):
     lines = generate_log_lines(spark, 150, seed=19)
     pool = discover_templates(lines, "text")
@@ -19,11 +20,7 @@ def test_reference_pool_roundtrip(spark, tmp_path):
     path = tmp_path / "templates.json"
     path.write_text(json.dumps(data, indent=2))
 
-    ref_models()  # register Template model first
-    ref_pool_mod = _ref_package_module(
-        "logparser_llm.storage.template_pool",
-        "/root/reference/logparser_llm/storage/template_pool.py",
-    )
+    ref_pool_mod = ref_template_pool()
     rp = ref_pool_mod.TemplatePool()
     rp.load_from_file(str(path))
     assert len(rp.templates) == len(pool)

@@ -9,7 +9,7 @@ from logparser_llm_spark.operators.merging import (
     pool_remove_template,
 )
 
-from .ref_loader import ref_template_pool
+from .ref_loader import needs_reference, ref_template_pool
 
 POOL = [
     {"template_id": "tmpl_0000", "pattern": "connect to <*> failed with <*>",
@@ -36,6 +36,7 @@ def _ref_pool():
     return pool
 
 
+@needs_reference
 def test_merge_templates_differential():
     ref = _ref_pool()
     ref_id = ref.merge_templates("tmpl_0000", "tmpl_0001")
@@ -58,6 +59,7 @@ def test_merge_templates_differential():
     }
 
 
+@needs_reference
 def test_merge_templates_missing_id_is_noop():
     ref = _ref_pool()
     assert ref.merge_templates("tmpl_0000", "nope") is None
@@ -65,6 +67,7 @@ def test_merge_templates_missing_id_is_noop():
     assert rid is None and ours == POOL
 
 
+@needs_reference
 def test_remove_template_differential():
     ref = _ref_pool()
     assert ref.remove_template("tmpl_0002") is True
@@ -75,6 +78,7 @@ def test_remove_template_differential():
     assert not ok2 and ours2 == ours
 
 
+@needs_reference
 def test_merge_patterns_zip_matches_reference():
     ref = _ref_pool()
     cases = [
