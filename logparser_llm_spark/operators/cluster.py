@@ -57,16 +57,34 @@ Pass 2 (assignment, no shuffle of the fact side):
 
 from __future__ import annotations
 
+import functools
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig, DEFAULT_CONFIG
+from ..config import DEFAULT_CONFIG, PipelineConfig, PreprocessingConfig
 from ..functions.cleaning import clean_col, is_valid_log_col
 from ..session import local_frame
 from .drain import UNKNOWN_ID, TemplateTree, extract_template, extract_template_col
 from .merging import dedup_pool_exact, generalize_pool, merge_pool
+
+
+# The fixed per-row Columns are built once per process: each is a tree
+# of JVM expression nodes whose construction takes tens of milliseconds
+# of py4j calls. A Column is an unresolved expression bound to no
+# session, so one object serves every frame of every session.
+
+
+@functools.cache
+def _clean_cols(text_col: str, preprocessing: PreprocessingConfig) -> tuple[Column, Column]:
+    return clean_col(F.col(text_col), preprocessing), is_valid_log_col(F.col("cleaned"))
+
+
+@functools.cache
+def _pattern() -> Column:
+    """Null for an invalid line, else the JVM extractor of ``cleaned``."""
+    return F.when(F.col("is_valid"), extract_template_col(F.col("cleaned")))
 
 
 def cleaned_frame(df: DataFrame, text_col: str, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:
@@ -74,9 +92,8 @@ def cleaned_frame(df: DataFrame, text_col: str, cfg: PipelineConfig = DEFAULT_CO
     chain — whole-stage codegen, no Python workers) and a validity flag.
     Tests cross-check it byte-for-byte against the Python reference
     ``clean_pandas``."""
-    return df.withColumn("cleaned", clean_col(F.col(text_col), cfg.preprocessing)).withColumn(
-        "is_valid", is_valid_log_col(F.col("cleaned"))
-    )
+    cleaned, is_valid = _clean_cols(text_col, cfg.preprocessing)
+    return df.withColumn("cleaned", cleaned).withColumn("is_valid", is_valid)
 
 
 def pattern_col():
@@ -94,8 +111,7 @@ def pattern_counts(cleaned_df: DataFrame) -> DataFrame:
     every line — absent when the input has no rows. Everything a
     counts-only caller needs follows from it: discovery collects the
     total, the invalid count and the top patterns in one job."""
-    pattern = F.when(F.col("is_valid"), extract_template_col(F.col("cleaned")))
-    return cleaned_df.rollup(pattern.alias("pattern")).agg(
+    return cleaned_df.rollup(_pattern().alias("pattern")).agg(
         F.count(F.lit(1)).alias("count"),
         F.min("cleaned").alias("example"),
         F.grouping_id().alias("is_total"),
@@ -212,9 +228,7 @@ def assign_templates(
     codegen, no shuffle of the fact side, no Python workers. Keeps the
     ``cleaned``/``is_valid`` columns for the projection downstream."""
     cleaned = df if pre_cleaned else cleaned_frame(df, text_col, cfg)
-    base = cleaned.withColumn(
-        "_pattern", F.when(F.col("is_valid"), extract_template_col(F.col("cleaned")))
-    )
+    base = cleaned.withColumn("_pattern", _pattern())
     return assign_patterns(base, pool, cfg, "_pattern").drop("_pattern")
 
 

@@ -26,6 +26,7 @@ Scale design notes (explicit partitioning / shuffle / skew handling):
 
 from __future__ import annotations
 
+import functools
 from collections import Counter
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
@@ -147,9 +148,14 @@ def parsed_projection(assigned: DataFrame, pool: list[dict]) -> DataFrame:
         .withColumn("used_llm", F.lit(False))
         .drop("_pool_pattern", "_pool_confidence")
     )
-    return out.withColumn(
-        "variables", extract_variables_col(F.col("cleaned"), F.col("template_pattern"))
-    )
+    return out.withColumn("variables", _variables())
+
+
+@functools.cache
+def _variables() -> Column:
+    """The ``variables`` Column, built once per process (see
+    ``cluster._clean_cols``)."""
+    return extract_variables_col(F.col("cleaned"), F.col("template_pattern"))
 
 
 def route(df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> DataFrame:

@@ -58,9 +58,9 @@ class StreamingParser:
         self.pool: list[dict] = self.checkpoint.pool if self.checkpoint else []
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         s = parse_slice(batch_df, self.text_col, self.pool, self.cfg)
+        if not s.lineage["rows_total"]:  # the discovery collect saw no row
+            return
         self.pool = s.pool
         write_slice(s, self.output_dir, f"batch-{batch_id}")
         if self.checkpoint is not None:

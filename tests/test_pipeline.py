@@ -249,6 +249,62 @@ def test_list_input_files_is_metadata_only(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def _listed_by_list_files(spark, input_path):
+    """The earlier ``fs.listFiles(path, recursive)`` enumeration, with the
+    same hidden-segment filter: the reference for the listStatus walk."""
+    from logparser_llm_spark.plans.checkpoint import _hadoop_fs, norm_file_uri
+
+    fs, jpath = _hadoop_fs(spark, input_path)
+    root = norm_file_uri(jpath.toString()).rstrip("/")
+    out = []
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        uri = norm_file_uri(it.next().getPath().toString())
+        rel = uri[len(root):].lstrip("/") if uri.startswith(root) else uri
+        if not any(seg.startswith(("_", ".")) for seg in rel.split("/")):
+            out.append(uri)
+    return sorted(out)
+
+
+@pytest.mark.parametrize(
+    "layout, root, want",
+    [
+        ("partitioned", "src", ["k=1/j=a/part-0.parquet", "k=1/part-1.parquet", "k=2/part-2.parquet"]),
+        ("hidden", "src", ["part-0.parquet", "sub/part-1.parquet"]),
+        ("work_parent", "_work/src", ["part-0.parquet", "k=1/part-1.parquet"]),
+        ("single_file", "src/part-0.parquet", [""]),
+    ],
+)
+def test_list_input_files_layouts(spark, tmp_path, layout, root, want):
+    """The listStatus walk returns exactly what the ``listFiles``
+    enumeration returns: nested ``k=v/`` dirs, writer debris hidden
+    below the root (``_temporary/``, ``.spark-staging-*``, ``_SUCCESS``),
+    a hidden segment above the root kept, a single-file input."""
+    from logparser_llm_spark.plans.checkpoint import list_input_files, norm_file_uri
+
+    data = {
+        "partitioned": want,
+        "hidden": want + [
+            "_SUCCESS",
+            "_temporary/0/part-9.parquet",
+            ".spark-staging-1/part-8.parquet",
+            "sub/_temporary/0/task/part-7.parquet",
+            "sub/.part-1.parquet.crc",
+        ],
+        "work_parent": want + ["_SUCCESS", "k=1/_temporary/0/part-9.parquet"],
+        "single_file": ["part-0.parquet", "part-1.parquet"],
+    }[layout]
+    top = tmp_path / ("src" if layout == "single_file" else root)
+    for rel in data:
+        path = top / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(b"")
+    input_path = str(tmp_path / root)
+    listed = list_input_files(spark, input_path)
+    assert listed == _listed_by_list_files(spark, input_path)
+    assert listed == sorted(norm_file_uri(str(tmp_path / root / w)).rstrip("/") for w in want)
+
+
 def test_manifest_keys_match_input_file_name(spark, tmp_path):
     """Hadoop-FS listing and Spark's input_file_name() must normalize to
     the same manifest keys, or resume reprocesses everything."""
@@ -266,30 +322,64 @@ def test_manifest_keys_match_input_file_name(spark, tmp_path):
     assert listed == scanned
 
 
-def test_manifest_rows_are_per_file_in_one_run(spark, tmp_path):
+@pytest.mark.parametrize("branch", ["observed", "wide"])
+def test_manifest_rows_are_per_file_in_one_run(spark, tmp_path, monkeypatch, branch):
     """Files of different sizes read in ONE run: each file's manifest
-    counters are its own rows. Eight small files make the scan pack
+    counters are its own rows, in both lineage branches (counters
+    observed on the sink write, or a groupBy once the run has more files
+    than the observation takes). Eight small files make the scan pack
     several into one task, where a file name read above an operator
-    that buffers rows names whichever file the scan reached last."""
+    that buffers rows names whichever file the scan reached last. One
+    file's name holds a space, ``%`` and ``+``: the observation keys its
+    counters by ``inputFiles()``, which must spell each name as
+    ``input_file_name()`` tags the rows."""
     from urllib.parse import urlparse
 
     import pyarrow.parquet as pq
 
+    from logparser_llm_spark.functions.cleaning import is_valid_log_col
+    from logparser_llm_spark.plans import checkpoint
     from logparser_llm_spark.plans.checkpoint import list_input_files
 
+    if branch == "wide":
+        monkeypatch.setattr(checkpoint, "MAX_OBSERVED_FILES", 7)
     src = str(tmp_path / "src")
     ck = str(tmp_path / "ck")
     out = str(tmp_path / "out")
     for i in range(8):
-        generate_pages(spark, 5 + 7 * i, seed=31 + i).coalesce(1).write.mode("append").parquet(src)
+        pages = generate_pages(spark, 5 + 7 * i, seed=31 + i)
+        # a short line is invalid: its row counts in rows_total only
+        pages = pages.withColumn("text", F.when(F.crc32("url") % 4 == 0, "?!").otherwise(F.col("text")))
+        pages.coalesce(1).write.mode("append").parquet(src)
+    first = sorted(n for n in os.listdir(src) if n.endswith(".parquet"))[0]
+    os.rename(os.path.join(src, first), os.path.join(src, "a b%c+d.parquet"))
     files = list_input_files(spark, src)
-    sizes = {f: pq.ParquetFile(urlparse(f).path).metadata.num_rows for f in files}
+    assert any(f.endswith("/a b%c+d.parquet") for f in files)
+    paths = {f: urlparse(f).path for f in files}
+    sizes = {f: pq.ParquetFile(p).metadata.num_rows for f, p in paths.items()}
     assert len(set(sizes.values())) == 8
 
-    r = run_resumable(spark, src, ck, out)
+    # a pool capped below the patterns seen sends the tail to unknown
+    cfg = PipelineConfig(scale=ScaleConfig(broadcast_pool_max_templates=40))
+    r = run_resumable(spark, src, ck, out, cfg=cfg)
     assert sorted(r["processed"]) == sorted(files)
     manifest = Checkpoint.load(ck)
     assert {f: e["rows_total"] for f, e in manifest.completed.items()} == sizes
+
+    # each text's label in the sink rows (template and validity follow
+    # from the text alone), summed over each file's texts
+    sink = spark.read.parquet(f"{out}/sinks").select(
+        "text", "template_id", is_valid_log_col(F.col("cleaned")).alias("valid")
+    )
+    label = {r["text"]: (r["valid"], r["template_id"] == "unknown") for r in sink.collect()}
+    for f, p in paths.items():
+        texts = pq.read_table(p, columns=["text"]).column("text").to_pylist()
+        entry = manifest.completed[f]
+        assert entry["rows_valid"] == sum(label[t][0] for t in texts), f
+        assert entry["rows_unknown"] == sum(label[t][1] for t in texts), f
+    entries = manifest.completed.values()
+    assert sum(e["rows_total"] - e["rows_valid"] for e in entries) > 0
+    assert sum(e["rows_unknown"] - e["rows_total"] + e["rows_valid"] for e in entries) > 0
 
 
 def test_crashed_sink_append_is_idempotent(spark, tmp_path):

@@ -246,23 +246,66 @@ def test_micro_batch_persists_nothing(spark, monkeypatch, tmp_path):
     from logparser_llm_spark.sources import sinks
     from logparser_llm_spark.streaming.incremental import StreamingParser
 
-    sc = spark.sparkContext
+    seen = []
+    write = sinks.write_run_idempotent
 
-    def cached():
-        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+    def recording_write(*args, **kwargs):
+        write(*args, **kwargs)
+        seen.append(_cached_rdds(spark))
+
+    before = _cached_rdds(spark)
+    monkeypatch.setattr(sinks, "write_run_idempotent", recording_write)
+    StreamingParser(str(tmp_path / "out")).process_batch(generate_pages(spark, 60, seed=48), 0)
+    assert len(seen) == 2  # sink rows, run counts
+    assert seen == [before, before] and _cached_rdds(spark) == before
+
+
+def _cached_rdds(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_incremental_run_job_count(spark, monkeypatch, tmp_path):
+    """An incremental call over one new file of log lines runs nine
+    jobs: the scan's schema read, the discovery aggregate's map stage and
+    collect, the sink write with its three broadcast builds (assignment
+    map, pool dim, domain dim), the run-counts write and the counts
+    publish. Nothing is cached while or after its writes run: each
+    file's lineage is observed on the sink write, not counted by a
+    groupBy over a persisted frame."""
+    from logparser_llm_spark.plans.checkpoint import run_resumable
+    from logparser_llm_spark.sources import sinks
+    from logparser_llm_spark.sources.synth import generate_log_lines
+
+    src, ck, out = (str(tmp_path / d) for d in ("src", "ck", "out"))
+    generate_log_lines(spark, 60, seed=49).coalesce(1).write.parquet(src)
+    run_resumable(spark, src, ck, out)
+    generate_log_lines(spark, 40, seed=50).coalesce(1).write.mode("append").parquet(src)
 
     seen = []
     write = sinks.write_run_idempotent
 
     def recording_write(*args, **kwargs):
         write(*args, **kwargs)
-        seen.append(cached())
+        seen.append(_cached_rdds(spark))
 
-    before = cached()
+    before = _cached_rdds(spark)
     monkeypatch.setattr(sinks, "write_run_idempotent", recording_write)
-    StreamingParser(str(tmp_path / "out")).process_batch(generate_pages(spark, 60, seed=48), 0)
+    r, n = _jobs_of(spark, "incremental-run-jobs", lambda: run_resumable(spark, src, ck, out))
+    assert len(r["processed"]) == 1
+    assert n == 9, n
     assert len(seen) == 2  # sink rows, run counts
-    assert seen == [before, before] and cached() == before
+    assert seen == [before, before] and _cached_rdds(spark) == before
+
+
+def test_micro_batch_job_count(spark, tmp_path):
+    """A non-empty micro-batch runs the slice step's jobs and no
+    emptiness probe: an empty batch is caught by the discovery collect."""
+    from logparser_llm_spark.streaming.incremental import StreamingParser
+
+    batch = spark.read.parquet(f"{SF}/documents.parquet")
+    parser = StreamingParser(str(tmp_path / "out"))
+    _, n = _jobs_of(spark, "micro-batch-jobs", lambda: parser.process_batch(batch, 0))
+    assert n == 7, n
 
 
 def test_enrich_joins_are_broadcast(spark):

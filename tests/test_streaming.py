@@ -78,6 +78,24 @@ def test_replayed_batch_id_is_written_once(spark, tmp_path):
     }
 
 
+def test_empty_micro_batch_writes_nothing(spark, tmp_path):
+    """An empty micro-batch leaves no ``run=batch-<id>`` dir and saves no
+    checkpoint; the next non-empty batch writes its own run as usual."""
+    import os
+
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    parser = StreamingParser(out, checkpoint_dir=ck)
+    pages = generate_pages(spark, 30, seed=45)
+    parser.process_batch(pages.limit(0), 3)
+    assert not os.path.exists(out) and not os.path.exists(ck)
+    assert parser.pool == []
+
+    parser.process_batch(pages, 4)
+    assert sorted(os.listdir(f"{out}/sinks")) == ["run=batch-4"]
+    assert sorted(os.listdir(f"{out}/run_counts")) == ["run=batch-4"]
+    assert os.path.exists(f"{ck}/pool.json") and parser.pool
+
+
 def test_micro_batch_equals_resumable_run(spark, tmp_path):
     """A micro-batch and a resumable run over the same files share one
     slice step: same pool, same sink rows, same per-run counts."""
